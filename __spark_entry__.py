@@ -3306,7 +3306,7 @@ FROM s
 def oracle_sql() -> dict[str, str]:
     verbosity = f"""
 WITH per_doc AS (
-  SELECT source, str_split(text, ' ') AS words FROM documents
+  SELECT source, str_split(coalesce(text, ''), ' ') AS words FROM documents
 ), turn AS (
   SELECT source,
          len(words) AS wc,
@@ -3341,7 +3341,8 @@ SELECT * FROM turn_agg JOIN word_agg USING (source)
 
     lexdiv = """
 WITH d AS (
-  SELECT doc_id, str_split(text, ' ') AS words, len(str_split(text,' ')) AS n
+  SELECT doc_id, str_split(coalesce(text, ''), ' ') AS words,
+         len(str_split(coalesce(text, ''), ' ')) AS n
   FROM documents
 ), m AS (
   SELECT doc_id, n, words,

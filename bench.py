@@ -43,8 +43,10 @@ def _force(df) -> int:
 
 
 def flagship_pipeline(t):
-    """Point-in-time feature matrix: sessionize -> role transitions ->
-    rolling windows -> backfill -> conv-level packs as-of joined back."""
+    """Turn feature matrix: sessionize -> role transitions -> rolling
+    windows -> backfill, then the whole-conversation verbosity aggregate
+    joined on ``conv_id``. That last join is not point-in-time: every turn
+    row sees the pack of its whole conversation, later turns included."""
     import pyspark.sql.functions as F
 
     from feature_extraction_spark.ops.backfill import backfill

@@ -5,7 +5,9 @@ Parity notes vs the reference:
 - Tokenization is ``s.split(" ")`` — a literal single-space split that KEEPS
   empty strings (reference: text_features/extract_verbosity_stats.py:63,
   extract_lexical_diversity.py:79). Spark's ``split(col, ' ', -1)`` has
-  identical semantics (limit=-1 keeps trailing empties).
+  identical semantics (limit=-1 keeps trailing empties). NULL text (a
+  recognizer CSV's empty field, a JSONL line without text) tokenizes
+  like ''.
 - NaN, never NULL, is the null object for empty groups / zero denominators
   (reference: extract_verbosity_stats.py:26-36 and everywhere).
 - Syllable counting: the reference uses ``textstat.syllable_count`` (not
@@ -31,8 +33,11 @@ def nan_guard_div(num: Column, denom: Column) -> Column:
 
 
 def tokenize_expr(col: Column) -> Column:
-    """Literal single-space split, keeping empty tokens ('' stays a token)."""
-    return F.split(col, " ", -1)
+    """Literal single-space split, keeping empty tokens ('' stays a token).
+    NULL text tokenizes like '' (one empty token), in either ANSI mode:
+    a bare split would give a -1 word count with ANSI off, NULL with it
+    on, and no token rows to explode."""
+    return F.split(F.coalesce(col, F.lit("")), " ", -1)
 
 
 def ws_tokens_expr(col: Column) -> Column:

@@ -9,10 +9,13 @@ Two physical strategies, chosen by the caller or by a size/skew heuristic:
 
 1. ``asof_join`` (default, sort-merge shape): union-tag both sides, then
    ``last(value, ignorenulls=True)`` over a window partitioned by key and
-   ordered by (ts, side_tag) with an unbounded-preceding frame. Exactly ONE
-   shuffle of left+right on the key — the same cost as a sort-merge join —
-   and no Python. Right rows sort before left rows at equal ts, giving
-   inclusive (<=) semantics; strict mode flips the tag order.
+   ordered by (ts, side_tag) with an unbounded-preceding frame. Each side
+   is hash-partitioned on the key before the union and shuffled at most
+   once: a left side already partitioned by the key (the output of
+   ``sessionize`` / ``windows`` / ``backfill``) is not shuffled again, so
+   only the right side crosses the network. No Python. Right rows sort
+   before left rows at equal ts, giving inclusive (<=) semantics; strict
+   mode flips the tag order.
 
 2. ``asof_join_broadcast``: when the right side is small (a dimension
    time-series), collect it per key into a sorted array, broadcast, and
@@ -51,7 +54,7 @@ def asof_join(
     the latest right row at-or-before (or strictly before) the left row's ts,
     plus ``<ts_col><suffix>`` with that right row's timestamp.
 
-    ``direction`` (pandas ``merge_asof`` parity, same one-shuffle plan):
+    ``direction`` (pandas ``merge_asof`` parity, same plan):
 
     - ``"backward"`` (default): latest right row at-or-before — the
       point-in-time / zero-leakage direction.
@@ -65,9 +68,9 @@ def asof_join(
       candidates once the equal-ts row is discarded, which the single
       window pass cannot express).
 
-    All three directions run in the SAME single key-shuffle window pass —
-    ``nearest`` adds a second frame over the identical sort order, not a
-    second exchange.
+    All three directions run in the SAME window pass over the key-
+    partitioned union — ``nearest`` adds a second frame over the identical
+    sort order, not a second exchange.
 
     ``tolerance_s`` bounds the |left.ts - matched right.ts| age in every
     direction; matches outside it are nulled.
@@ -112,7 +115,12 @@ def asof_join(
         F.col(rts).alias("_r_ts"),
     ).select(*l_tagged.columns)  # align column order
 
-    unioned = l_tagged.unionByName(r_tagged)
+    # Partition each side by the keys before the union, not the union
+    # after it: Spark drops a repartition whose child is already hash-
+    # partitioned that way (sessionize / windows / backfill output), and
+    # spark.sql.unionOutputPartitioning (default on) carries the common
+    # partitioning into the window. Only an unpartitioned side is shuffled.
+    unioned = l_tagged.repartition(*keys).unionByName(r_tagged.repartition(*keys))
     ordered = Window.partitionBy(*keys).orderBy("_asof_ts", "_tag")
     wb = ordered.rowsBetween(Window.unboundedPreceding, 0)
     wf = ordered.rowsBetween(0, Window.unboundedFollowing)
@@ -283,7 +291,8 @@ def asof_join_auto(
     O(threshold) rows). At or below the threshold the right side packs
     into per-key sorted arrays and broadcasts (no shuffle of the fact side,
     immune to left-key skew); above it, the union-tag sort-merge shape
-    shuffles both sides once by key."""
+    shuffles each side at most once by key — a left side already
+    partitioned by the key is not shuffled at all."""
     thr = broadcast_threshold_rows
     n = right_rows if right_rows is not None else _estimated_rows(right)
     if n is None:

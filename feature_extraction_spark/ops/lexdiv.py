@@ -10,7 +10,8 @@ Spark-first rebuild:
 - The group's word sequence is the ordered concatenation of per-turn
   single-space splits (identical to the reference driver's
   ``" ".join(texts).split(" ")`` — one space between turns means the flatten
-  of per-turn splits equals the split of the join).
+  of per-turn splits equals the split of the join). Every turn, NULL text
+  included, yields at least one token, so every entity keeps a row.
 - MATTR window w in O(n) (no per-position sets): a token at position p
   whose previous same-word occurrence is at q (0 if none) is the *first*
   occurrence of its type inside exactly the windows starting in
@@ -102,14 +103,4 @@ def lexdiv_stats(
         F.col("n") / (F.lit(1.0) - F.col("V1") / (F.col("V") + F.lit(eps)))
     )
     out = out.withColumn("HS", F.when(F.col("n") == 0, nan()).otherwise(hs))
-    out = out.drop("n", "V", "V1")
-
-    # entities whose EVERY turn has NULL text emit no token rows (posexplode
-    # of NULL yields nothing) and would vanish from the output; keep the
-    # reference's every-entity-gets-a-row contract (NaN features), same as
-    # liwc_features' NULL-text handling
-    entities = transcripts.select(*keys).distinct()
-    out = entities.join(out, on=keys, how="left")
-    for c in [f"MATTR_{w}" for w in ttr_cols] + ["HS"]:
-        out = out.withColumn(c, F.coalesce(F.col(c), nan()))
-    return out
+    return out.drop("n", "V", "V1")

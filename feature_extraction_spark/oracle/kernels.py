@@ -16,10 +16,11 @@ import numpy as np
 NAN = float("nan")
 
 
-def tokenize(text: str) -> list[str]:
+def tokenize(text: str | None) -> list[str]:
     """Literal single-space split keeping empty tokens
-    (reference: extract_verbosity_stats.py:63)."""
-    return text.split(" ")
+    (reference: extract_verbosity_stats.py:63); None tokenizes like ''
+    (mirrors functions/text.py:tokenize_expr)."""
+    return (text or "").split(" ")
 
 
 _VOWEL_RE = re.compile(r"[aeiouy]+")
@@ -94,7 +95,7 @@ def honore(words: list[str]) -> float:
 def lexdiv_stats(texts: list[str]) -> dict[str, float]:
     """Lexical-diversity pack over the group's turn texts joined in order
     (reference driver joins segment texts with ' ' before splitting)."""
-    words = tokenize(" ".join(texts)) if texts else []
+    words = tokenize(" ".join(t or "" for t in texts)) if texts else []
     out = {f"MATTR_{w}": mattr(words, w) for w in (10, 25, 50)}
     out["HS"] = honore(words)
     return out

@@ -46,6 +46,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Static conf, read once when the session is created. One flagship
+        # operation cycles through ~120 generated classes, more than the
+        # default LRU of 100 holds, so every operation recompiled them.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # ANSI mode off: the engine's NaN-guard semantics (x/0 -> NULL -> NaN
         # literal) match the reference's float('nan') convention.
         .config("spark.sql.ansi.enabled", "false")

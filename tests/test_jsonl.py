@@ -171,3 +171,26 @@ def test_parse_jsonl_nested_structtype_schema(spark):
     assert good[0]["meta"]["turns"] == 3
     assert good[0]["tags"][0]["name"] == "a"
     assert bad[0]["_corrupt"] == "not json"
+
+
+def test_parse_jsonl_wrong_type_keeps_partial_result(spark):
+    """Valid JSON with a field of the wrong type (the registry's
+    jsonl_parse_events %89 class): PERMISSIVE keeps the partial result.
+    The mismatched field is NULL, every other field is recovered, and the
+    corrupt column carries the raw line. Malformed JSON, by contrast,
+    recovers no field."""
+    badtype = '{"event_id": 178, "event_type": "click", "user_id": "x42"}'
+    nested = '{"event_id": 267, "event_type": "view", "user_id": {"id": 7}}'
+    good = '{"event_id": 3, "event_type": "buy", "user_id": 9}'
+    truncated = '{"event_id'
+    df = spark.createDataFrame(
+        [(1, badtype), (2, nested), (3, good), (4, truncated)],
+        "src_id int, json string",
+    )
+    out = parse_jsonl(df, schema="event_id bigint, event_type string, user_id bigint")
+    assert out.columns == ["src_id", "event_id", "event_type", "user_id", "_corrupt"]
+    rows = {r["src_id"]: tuple(r)[1:] for r in out.collect()}
+    assert rows[1] == (178, "click", None, badtype)
+    assert rows[2] == (267, "view", None, nested)
+    assert rows[3] == (3, "buy", 9, None)
+    assert rows[4] == (None, None, None, truncated)

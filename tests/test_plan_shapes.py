@@ -23,9 +23,42 @@ def turns(spark, transcripts, tmp_path_factory):
     return spark.read.parquet(p)
 
 
+def _children(node) -> list:
+    ch = node.children()
+    return [ch.apply(i) for i in range(ch.size())]
+
+
+def _initial_tree(df):
+    """Root of the physical plan Spark would run first: the initial plan
+    under AQE (every exchange planned, none re-optimized yet)."""
+    p = df._jdf.queryExecution().executedPlan()
+    return p.initialPlan() if p.nodeName() == "AdaptiveSparkPlan" else p
+
+
+def _exchanges(node) -> int:
+    return (node.nodeName() == "Exchange") + sum(_exchanges(c) for c in _children(node))
+
+
+def _find(node, name: str):
+    if node.nodeName() == name:
+        return node
+    return next((f for c in _children(node) if (f := _find(c, name)) is not None), None)
+
+
+def _asof_union_sides(df) -> tuple[int, int, int]:
+    """(exchanges above the as-of union, in its left side, in its right
+    side) of an ``asof_join`` plan."""
+    root = _initial_tree(df)
+    union = _find(root, "Union")
+    assert union is not None, root.toString()
+    left, right = _children(union)
+    return _exchanges(root) - _exchanges(union), _exchanges(left), _exchanges(right)
+
+
 def test_asof_join_single_shuffle(spark, turns):
-    """Union-tag as-of join: L union R shuffles ONCE on the key (sort-merge
-    cost); no second exchange above the window."""
+    """Union-tag as-of join: each side is shuffled at most once on the key,
+    before the union; nothing shuffles above the union (the window reads
+    the union's carried-through key partitioning)."""
     from feature_extraction_spark.ops.asof import asof_join
 
     right = turns.groupBy("conv_id", "ts").agg(F.max("turn_idx").alias("v"))
@@ -33,10 +66,47 @@ def test_asof_join_single_shuffle(spark, turns):
         turns.select("conv_id", "turn_idx", "ts"), right,
         on="conv_id", value_cols=["v"],
     )
-    plan = _plan(out)
-    # the right side's pre-aggregation owns one exchange; the as-of union-tag
-    # window owns exactly one more — nothing else may shuffle
-    assert plan.count(SHUFFLE) == 2, plan
+    above, left, right_side = _asof_union_sides(out)
+    # the unpartitioned left scan: one key exchange; the right: its own
+    # pre-aggregation's exchange plus one key exchange
+    assert (above, left, right_side) == (0, 1, 2), _plan(out)
+    assert _plan(out).count(SHUFFLE) == 3, _plan(out)
+
+
+def test_asof_join_keeps_sessionized_left_partitioning(spark, turns):
+    """A sessionize(...) left side arrives hash-partitioned by conv_id, so
+    the as-of join adds no exchange on the left: the turn table is shuffled
+    once in the whole chain, and only the right side crosses the network.
+    Values match the broadcast strategy, which shuffles no left side, with
+    AQE coalescing off so the union really spans several partitions."""
+    from feature_extraction_spark.ops.asof import asof_join, asof_join_broadcast
+    from feature_extraction_spark.ops.sessionize import sessionize
+
+    left = sessionize(turns, gap_seconds=300.0)
+    right = turns.filter(F.col("turn_idx") % 3 == 0).select(
+        "conv_id",
+        (F.col("ts") + F.expr("INTERVAL 7 SECONDS")).alias("ts"),
+        F.col("turn_idx").alias("v"),
+    )
+    out = asof_join(left, right, on="conv_id", value_cols=["v"])
+    assert _asof_union_sides(out) == (0, 1, 1), _plan(out)
+    assert _plan(out).count(SHUFFLE) == 2, _plan(out)
+
+    key = ["conv_id", "turn_idx"]
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        got = out.orderBy(*key).collect()
+    finally:
+        spark.conf.set(coalesce, saved)
+    exp = (
+        asof_join_broadcast(left, right, on="conv_id", value_cols=["v"])
+        .orderBy(*key)
+        .collect()
+    )
+    assert len(got) == turns.count()
+    assert got == exp
 
 
 def test_asof_join_broadcast_no_fact_shuffle(spark, turns):

@@ -226,8 +226,9 @@ def test_liwc_null_text(spark):
 
 def test_lexdiv_null_text_entity_keeps_row(spark):
     """Regression (round-2 review): an entity whose every turn has NULL
-    text must yield a NaN feature row, not vanish (same contract as
-    liwc_features)."""
+    text must yield a feature row, not vanish. NULL text tokenizes like
+    '' (functions/text.py:tokenize_expr), so its row equals that of an
+    entity of empty turns: two empty tokens."""
     import datetime as dt
     import math
 
@@ -237,11 +238,16 @@ def test_lexdiv_null_text_entity_keeps_row(spark):
         ("c1", 0, "good words here and more", dt.datetime(2024, 1, 1)),
         ("c2", 0, None, dt.datetime(2024, 1, 1)),
         ("c2", 1, None, dt.datetime(2024, 1, 1, 0, 1)),
+        ("c3", 0, "", dt.datetime(2024, 1, 1)),
+        ("c3", 1, "", dt.datetime(2024, 1, 1, 0, 1)),
     ]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, text string, ts timestamp"
     )
     out = {r["conv_id"]: r for r in lexdiv_stats(df, level="conv").collect()}
-    assert set(out) == {"c1", "c2"}
-    assert math.isnan(out["c2"]["MATTR_10"]) and math.isnan(out["c2"]["HS"])
+    assert set(out) == {"c1", "c2", "c3"}
+    assert out["c2"].asDict() | {"conv_id": "c3"} == out["c3"].asDict()
+    # N=2, V=1, V1=0: window=n fallback TTR 1/2, HS = 100*ln(2)
+    assert out["c2"]["MATTR_10"] == 0.5
+    assert math.isclose(out["c2"]["HS"], 100 * math.log(2))
     assert out["c1"]["MATTR_10"] == 1.0  # 5 distinct words, window=n fallback
