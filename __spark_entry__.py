@@ -36,11 +36,11 @@ friend*\t3
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # parquet stores ts as TIMESTAMP_NTZ; the engine works in session-TZ
-    # (UTC) timestamps, and unix_micros requires TIMESTAMP.
-    return spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
+    # parquet stores ts as TIMESTAMP_NTZ, read as UTC wall-clock: the same
+    # instants as DuckDB's epoch_us, whatever the session zone.
+    from feature_extraction_spark.sources.io import with_utc_ts
+
+    return with_utc_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
 def _events_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,59 +88,6 @@ def _r4(df: DataFrame, cols: list[str]) -> DataFrame:
     for c in cols:
         df = df.withColumn(c, F.round(F.col(c).cast("double"), 4))
     return df
-
-
-_PINNED_CONFS = {
-    # non-ANSI division (x/0 -> NULL feeds the NaN guards; Spark 4 defaults
-    # ANSI on, where it throws) and UTC session TZ (unix_micros must agree
-    # with DuckDB's epoch_us on NTZ parquet).
-    "spark.sql.ansi.enabled": "false",
-    "spark.sql.session.timeZone": "UTC",
-}
-
-
-def _pin_confs(spark: SparkSession) -> dict[str, str | None]:
-    """Pin the runtime confs the engine's semantics depend on; returns the
-    previous values so callers can restore them."""
-    saved: dict[str, str | None] = {}
-    for k, v in _PINNED_CONFS.items():
-        try:
-            saved[k] = spark.conf.get(k, None)
-        except Exception:
-            saved[k] = None
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # conf locked down -> proceed with session defaults
-    return saved
-
-
-def _restore_confs(spark: SparkSession, saved: dict[str, str | None]) -> None:
-    for k, old in saved.items():
-        try:
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-        except Exception:
-            pass
-
-
-def _pinned(fn: Callable[[SparkSession, str], DataFrame]):
-    """Run ``fn`` with the engine confs pinned, restoring the caller's
-    previous values afterwards (the driver's shared session must not keep
-    our ANSI/TZ overrides). Safe to restore before the returned DataFrame is
-    collected: ANSI division and timezone semantics are resolved into the
-    analyzed plan eagerly at DataFrame-construction time."""
-
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        saved = _pin_confs(spark)
-        try:
-            return fn(spark, sf_dir)
-        finally:
-            _restore_confs(spark, saved)
-
-    return wrapped
 
 
 # ---------------------------------------------------------------- queries
@@ -540,10 +487,10 @@ def q_pos_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_liwc_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIWC category proportions per source group. r5: a NULL-text-only
-    entity ('zz~nulltext') is UNIONED in so the all-NaN-row convention
-    for NULL-text entities (the r2 ADVICE fix — num_words 0, every
-    proportion NaN, row NOT dropped) is exercised at the driver gate."""
+    """LIWC category proportions per source group. A NULL-text-only
+    entity ('zz~nulltext') is UNIONED in so the shared NULL-text rule is
+    exercised at the driver gate: its NULL turn is one empty token, like
+    '', so the entity keeps its row with every proportion 0.0."""
     from feature_extraction_spark.ops.liwc import liwc_features, parse_dic
 
     t = _docs_as_transcripts(spark, sf_dir, "source")
@@ -2190,21 +2137,17 @@ def entry(spark: SparkSession) -> DataFrame:
         with_role_transition,
     )
 
-    saved = _pin_confs(spark)
-    try:
-        t = _events_as_transcripts(spark, SF1)
-        t = sessionize(t, gap_seconds=3600.0)
-        t = with_role_transition(t)
-        t = rolling_turn_features(t, trailing_seconds=3600, trailing_rows=10)
-        t = t.withColumn("pv", F.when(F.col("role") == "purchase", F.col("value")))
-        t = backfill(t, ["pv"])
-        return t.select(
-            "conv_id", "turn_idx", "ts", "role", "session_id", "role_transition",
-            "gap_s", "roll_turns_3600s", "roll_tool_rate_3600s",
-            "roll_wc_mean_10", "pv_filled",
-        )
-    finally:
-        _restore_confs(spark, saved)
+    t = _events_as_transcripts(spark, SF1)
+    t = sessionize(t, gap_seconds=3600.0)
+    t = with_role_transition(t)
+    t = rolling_turn_features(t, trailing_seconds=3600, trailing_rows=10)
+    t = t.withColumn("pv", F.when(F.col("role") == "purchase", F.col("value")))
+    t = backfill(t, ["pv"])
+    return t.select(
+        "conv_id", "turn_idx", "ts", "role", "session_id", "role_transition",
+        "gap_s", "roll_turns_3600s", "roll_tool_rate_3600s",
+        "roll_wc_mean_10", "pv_filled",
+    )
 
 
 def q_interval_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2379,21 +2322,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     ordered = {k: _q[k] for k in _R05_WINDOW}
     ordered.update({k: f for k, f in _q.items() if k not in ordered})
     assert len(ordered) == len(_q), "window names must exist in the registry"
-    return {k: _pinned(f) for k, f in ordered.items()}
+    return ordered
 
 
-# ROUND-5 COVERAGE WINDOW (VERDICT r4 "Next round" #3): the driver writes
-# correctness rows for only the first 50 registry entries, so the window
-# leads with the 47 queries whose ONLY green driver row is from r03
-# (longest-unchecked — round-4/5 code could have regressed them), then
-# the 3 queries new/retired-from-rows-only in r5 (quality_model_docs'
-# frozen-coefficient oracle, graph_planted_docs, phrase_merge_docs).
-# Every query beyond position 50 has a green row in CORRECTNESS_r04, so
-# r04 ∪ r05 covers the whole registry again. The NULL-convention
-# variants (timing_stats_events %101 NULL word_timing, liwc_docs NULL-
-# text entity, lm_ppl_docs NULL/empty/whitespace docs) sit INSIDE this
-# window, so their oracle rows are driver-gated this round.
+# COVERAGE WINDOW: the driver writes correctness rows for only the first
+# 50 registry entries, and a row covers only the code it ran. So the
+# window leads with the four queries whose values changed after their last
+# row: liwc_docs (its NULL-text entity is one empty token now, so its
+# proportions are 0.0, not NaN) and jsonl_parse_events, shuffle_order_docs
+# and hard_negatives_emb (changed in r5, last row from r04). Then comes the
+# r05 window less tpch_q1, ivf_topk and bmp_stats_media, which read no text
+# or timestamp and keep their green r05 rows. Every query past position 50
+# has a green row in r04 or r05. The NULL-convention variants
+# (timing_stats_events' NULL word_timing, liwc_docs, lm_ppl_docs' NULL/
+# empty/whitespace docs) sit inside the window.
 _R05_WINDOW = [
+    "liwc_docs", "jsonl_parse_events", "shuffle_order_docs",
+    "hard_negatives_emb",
     "token_counts_docs", "langid_docs", "fingerprint_docs",
     "exact_dedup_docs", "jaccard_pairs_docs", "minhash_pairs_docs",
     "simhash_pairs_docs", "minhash_incremental_docs", "stream_dedup_docs",
@@ -2402,13 +2347,12 @@ _R05_WINDOW = [
     "asof_purchase_nearest", "decontaminate_bloom_docs", "emb_pool_label",
     "sessionize_events", "session_stats_events", "latency_stats_events",
     "rolling_events_1h", "backfill_purchase", "role_transitions_events",
-    "pos_docs", "liwc_docs", "quality_docs", "gopher_docs",
+    "pos_docs", "quality_docs", "gopher_docs",
     "bm25_topk_docs", "lm_ppl_docs", "rolling_median_events",
     "dup_spans_docs", "despan_docs", "heavy_hitters_docs",
     "zscore_events", "daily_stats_events", "asof_purchase_tolerance",
-    "graph_docs", "multilevel_events", "ivf_topk", "multimodal_features",
-    "bmp_stats_media", "hypothesis_mean_docs", "timing_stats_events",
-    "conf_stats_events", "tpch_q1",
+    "graph_docs", "multilevel_events", "multimodal_features",
+    "hypothesis_mean_docs", "timing_stats_events", "conf_stats_events",
     "quality_model_docs", "graph_planted_docs", "phrase_merge_docs",
 ]
 
@@ -2829,7 +2773,7 @@ WITH d0 AS (
   SELECT source, text FROM documents
   UNION ALL SELECT 'zz~nulltext', NULL
 ),
-per AS (SELECT source, str_split(text, ' ') AS w FROM d0),
+per AS (SELECT source, str_split(coalesce(text, ''), ' ') AS w FROM d0),
 nw AS (SELECT source, coalesce(sum(len(w)), 0) AS num_words
        FROM per GROUP BY source),
 toks AS (

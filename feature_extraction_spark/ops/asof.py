@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from feature_extraction_spark.sources.io import with_utc_ts
+
 
 def asof_join(
     left: DataFrame,
@@ -74,6 +76,8 @@ def asof_join(
 
     ``tolerance_s`` bounds the |left.ts - matched right.ts| age in every
     direction; matches outside it are nulled.
+
+    NTZ timestamps on either side are read as UTC wall-clock.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(
@@ -85,6 +89,7 @@ def asof_join(
     rts = right_ts_col or ts_col
     if value_cols is None:
         value_cols = [c for c in right.columns if c not in keys + [rts]]
+    left, right = with_utc_ts(left, ts_col), with_utc_ts(right, rts)
 
     # Tag order decides tie behavior at equal timestamps. Backward
     # inclusive (<=): right first (tag 0) so the unbounded-preceding frame
@@ -201,7 +206,7 @@ def asof_join_broadcast(
     ``direction`` matches :func:`asof_join`: ``backward`` (default) takes
     the last element at-or-before, ``forward`` the first at-or-after,
     ``nearest`` (``inclusive=True`` only) the closer of the two with ties
-    preferring backward.
+    preferring backward. NTZ timestamps are read as UTC wall-clock.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(
@@ -213,6 +218,7 @@ def asof_join_broadcast(
     rts = right_ts_col or ts_col
     if value_cols is None:
         value_cols = [c for c in right.columns if c not in keys + [rts]]
+    left, right = with_utc_ts(left, ts_col), with_utc_ts(right, rts)
 
     packed = right.groupBy(*keys).agg(
         F.sort_array(

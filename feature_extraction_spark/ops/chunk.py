@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from feature_extraction_spark.functions.text import ws_tokens_expr
+from feature_extraction_spark.sources.io import ntz_as_utc, with_utc_ts
 
 
 def _salted_md5(key: Column, salt: str) -> Column:
@@ -351,9 +352,16 @@ def temporal_split(
     entirely — it has context on both sides, so using either side leaks
     the other. One window min/max over the entity partition (single
     shuffle by entity, reused by any downstream per-entity op).
+
+    A string ``cutoff`` and an NTZ ``ts_col`` are read as UTC wall-clock.
     """
+    df = with_utc_ts(df, ts_col)
     ts = F.col(ts_col)
-    cut = F.lit(cutoff).cast("timestamp")
+    cut = F.lit(cutoff)
+    if isinstance(cutoff, str):
+        cut = ntz_as_utc(cut.cast("timestamp_ntz"))
+    else:
+        cut = cut.cast("timestamp")
     gap_end = F.timestamp_micros(
         F.unix_micros(cut) + F.lit(int(round(embargo_seconds * 1e6)))
     )

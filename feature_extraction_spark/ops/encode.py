@@ -206,11 +206,3 @@ def feature_cross(
     h = _entity_hash(list(cols), salt)
     word = F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint")
     return df.withColumn(out_col, (word % F.lit(int(n_buckets))).cast("int"))
-
-
-def cross_bucket_expr(cols: Sequence[str], n_buckets: int, salt: str = "fx") -> Column:
-    """The feature_cross bucket as a bare Column, for composing several
-    crosses in one select without chained withColumn."""
-    h = _entity_hash(list(cols), salt)
-    word = F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint")
-    return (word % F.lit(int(n_buckets))).cast("int")

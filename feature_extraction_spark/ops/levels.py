@@ -45,10 +45,13 @@ def with_entity_keys(
         if subject_expr is None:
             subject_expr = default_subject_expr()
         df = df.withColumn("subject_id", subject_expr)
+    # UTC calendar days and Monday weeks, from epoch seconds: to_date and
+    # date_trunc would follow the session zone
+    day = F.date_from_unix_date(F.floor(F.unix_seconds(ts_col) / 86400).cast("int"))
     if "day" not in df.columns:
-        df = df.withColumn("day", F.to_date(ts_col))
+        df = df.withColumn("day", day)
     if "week" not in df.columns:
-        df = df.withColumn("week", F.date_trunc("week", ts_col).cast("date"))
+        df = df.withColumn("week", F.date_sub(day, F.weekday(day)))
     return df
 
 
@@ -63,12 +66,6 @@ def keys_for(level: str) -> list[str]:
         "week": ["subject_id", "week"],
         "subject": ["subject_id"],
     }[level]
-
-
-def entity_id_expr(level: str) -> Column:
-    """Single-string entity id, like the reference's concatenated ids
-    (group_audio_files.py:28: str(subject_id)+'_'+str(date))."""
-    return F.concat_ws("_", *[F.col(c).cast("string") for c in keys_for(level)])
 
 
 def attach_subject(df: DataFrame, dim: DataFrame, on: str = "conv_id") -> DataFrame:

@@ -67,11 +67,6 @@ def parse_dic(text: str) -> LiwcDict:
     return LiwcDict(list(id2cat.values()), exact, wild)
 
 
-def load_dic(path: str) -> LiwcDict:
-    with open(path) as f:
-        return parse_dic(f.read())
-
-
 def liwc_features(
     transcripts: DataFrame,
     dic: LiwcDict,
@@ -115,18 +110,10 @@ def liwc_features(
     toks = toks.repartition(*keys, "tok")
 
     # num_words per entity = sum(size(words)) over ALL rows of the source
-    # (split keeps empties — reference F1 semantics). Aggregated from the
-    # transcripts DataFrame, not the exploded token stream: a NULL-text row
-    # has NULL `words`, so it would vanish from `toks` (concat of NULL is
-    # NULL) and an entity whose every turn is NULL text would disappear
-    # from the output instead of yielding the reference's NaN row. Here a
-    # NULL text contributes 0 words and every entity keeps its row.
+    # (split keeps empties — reference F1 semantics; a NULL text is one
+    # empty token, like '')
     nw = transcripts.groupBy(*keys).agg(
-        F.sum(
-            F.when(F.col(text_col).isNull(), F.lit(0)).otherwise(F.size(words))
-        )
-        .cast("double")
-        .alias("_num_words")
+        F.sum(F.size(words)).cast("double").alias("_num_words")
     )
 
     exact_df = spark.createDataFrame(dic.exact, "tok string, cat string")

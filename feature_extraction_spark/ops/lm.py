@@ -360,13 +360,15 @@ def train_phrases(
     threshold: float = 10.0,
 ) -> DataFrame:
     """Collocation detection with the gensim-Phrases ORIGINAL scorer
-    (Mikolov et al. 2013 eq. 6; the reference's phrase models are built
-    exactly this way — text_util.py:50-71, gensim.models.Phrases):
+    (Mikolov et al. 2013 eq. 6; the reference's phrase models use it —
+    text_util.py:50-71, gensim.models.Phrases):
     score(a, b) = (c_ab - min_count) * V / (c_a * c_b) over UNIGRAM
-    counts c_a/c_b and vocabulary size V (distinct tokens); a bigram is
-    a phrase when score > threshold. NOT iterative — one counting pass
-    plus a threshold rule, so the whole trainer is SQL-expressible and
-    value-oracled in the driver (phrase_merge_docs).
+    counts c_a/c_b and vocabulary size V; a bigram is a phrase when
+    score > threshold. V counts distinct unigram types only, while
+    gensim's len(vocab) counts unigrams and bigrams, so its V is larger
+    and a gensim threshold does not transfer as is. NOT iterative — one
+    counting pass plus a threshold rule, so the whole trainer is
+    SQL-expressible and value-oracled in the driver (phrase_merge_docs).
 
     Plan: the corpus is scanned twice (unigram counts; row-locally
     zipped bigram counts) — both map-side-combinable hash aggregations;

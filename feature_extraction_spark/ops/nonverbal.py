@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from feature_extraction_spark.functions.text import nan_guard_div
+from feature_extraction_spark.functions.text import nan_guard_div, tokenize_expr
 from feature_extraction_spark.ops.levels import keys_for
 
 MARKERS = {"laughter": "[laughter]", "noise": "[noise]", "unk": "<unk>"}
@@ -22,7 +22,7 @@ def nonverbal_stats(
     transcripts: DataFrame, level: str = "conv", text_col: str = "text"
 ) -> DataFrame:
     keys = keys_for(level)
-    tokens = F.split(F.trim(F.col(text_col)), " ", -1)
+    tokens = tokenize_expr(F.trim(F.col(text_col)))
 
     def count_marker(marker: str):
         # NB: the HOF lambda must take exactly one parameter — a second

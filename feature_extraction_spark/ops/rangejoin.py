@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from feature_extraction_spark.sources.io import with_utc_ts
+
 
 def interval_join(
     points: DataFrame,
@@ -76,10 +78,14 @@ def interval_join(
     fan-out. Pass ``assert_valid=True`` to fail the job on the first
     inverted interval instead (NULL bounds stay drop-not-error: an open
     interval table routinely carries them).
+
+    NTZ timestamps are read as UTC wall-clock.
     """
     if how not in ("inner", "left"):
         raise ValueError(f"how must be inner or left, got {how!r}")
     keys = [on] if isinstance(on, str) else list(on or [])
+    points = with_utc_ts(points, ts_col)
+    intervals = with_utc_ts(with_utc_ts(intervals, start_col), end_col)
 
     g_us = int(granule_seconds * 1_000_000)
     if g_us < 1:

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from feature_extraction_spark.ops.windows import ORDER_COLS
+from feature_extraction_spark.sources.io import with_utc_ts
 
 
 def sessionize(
@@ -24,7 +25,9 @@ def sessionize(
     out_col: str = "session_id",
 ) -> DataFrame:
     """Add integer ``session_id`` (0-based per conversation): a new session
-    starts when the inter-turn gap exceeds ``gap_seconds``."""
+    starts when the inter-turn gap exceeds ``gap_seconds``. An NTZ ts is
+    read as UTC wall-clock."""
+    df = with_utc_ts(df, ts_col)
     w = Window.partitionBy("conv_id").orderBy(*ORDER_COLS)
     prev_ts = F.lag(ts_col).over(w)
     gap = (F.unix_micros(ts_col) - F.unix_micros(prev_ts)) / F.lit(1_000_000.0)

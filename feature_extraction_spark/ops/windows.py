@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from feature_extraction_spark.functions.text import nan_guard_div, tokenize_expr
+from feature_extraction_spark.sources.io import with_utc_ts
 
 # Stable turn ordering invariant (input_hint): ts first, turn_idx tiebreak.
 ORDER_COLS = ["ts", "turn_idx"]
@@ -46,7 +47,9 @@ def with_turn_order(df: DataFrame) -> DataFrame:
 
 def with_inter_turn_latency(df: DataFrame) -> DataFrame:
     """gap_s = seconds since previous turn in the conversation (NULL for the
-    first turn); lag-gap semantics of W2 lifted to turn grain."""
+    first turn); lag-gap semantics of W2 lifted to turn grain. An NTZ ts is
+    read as UTC wall-clock."""
+    df = with_utc_ts(df)
     w = conv_window()
     prev_ts = F.lag("ts").over(w)
     return df.withColumn(
@@ -108,6 +111,8 @@ def rolling_turn_features(
       roll_tool_rate_{T}s  — fraction of those turns that used a tool
       roll_gap_mean_{T}s   — mean inter-turn gap in the trailing window
       roll_wc_mean_{k}     — mean per-turn word count over last k turns
+
+    An NTZ ts is read as UTC wall-clock.
     """
     df = with_inter_turn_latency(df)
     sec = F.unix_micros("ts").cast("double") / 1_000_000.0

@@ -104,8 +104,8 @@ def lexdiv_stats(texts: list[str]) -> dict[str, float]:
 def nonverbal_stats(texts: list[str]) -> dict[str, float]:
     """Non-verbal token ratios (reference:
     kaldi_asr_features/extract_non_verbal.py:8-23); note the .strip() before
-    the split."""
-    tokens = [tok for t in texts for tok in t.strip().split(" ")]
+    the split. None tokenizes like ''."""
+    tokens = [tok for t in texts for tok in (t or "").strip().split(" ")]
     total = len(tokens)
     if not total:
         return {"laughter": NAN, "noise": NAN, "unk": NAN}

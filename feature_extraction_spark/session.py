@@ -50,9 +50,6 @@ def get_spark(
         # operation cycles through ~120 generated classes, more than the
         # default LRU of 100 holds, so every operation recompiled them.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
-        # ANSI mode off: the engine's NaN-guard semantics (x/0 -> NULL -> NaN
-        # literal) match the reference's float('nan') convention.
-        .config("spark.sql.ansi.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

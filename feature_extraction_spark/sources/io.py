@@ -15,8 +15,9 @@ for row-group skipping.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -29,14 +30,34 @@ def _iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def ntz_as_utc(c: Column) -> Column:
+    """A TIMESTAMP_NTZ column as the TIMESTAMP instant its wall-clock names
+    in UTC. Rebuilt from its fields, so no session zone enters: a plain
+    cast goes through the session zone, where a DST change maps two wall
+    clocks to one instant or puts an extra hour between neighbours."""
+    return F.make_timestamp(
+        F.year(c), F.month(c), F.dayofmonth(c), F.hour(c), F.minute(c),
+        F.extract(F.lit("SECOND"), c), F.lit("UTC"),
+    )
+
+
+def with_utc_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+    """Read an NTZ ``ts_col`` as UTC wall-clock (:func:`ntz_as_utc`), so
+    epoch arithmetic on it gives one answer in every session zone. A
+    TIMESTAMP column is returned untouched, plan included."""
+    if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
+        return df.withColumn(ts_col, ntz_as_utc(F.col(ts_col)))
+    return df
+
+
 def read_transcripts(spark: SparkSession, path_or_table: str) -> DataFrame:
     """Load the canonical transcripts table from an Iceberg table name or a
-    parquet path; normalizes ts to session-TZ TIMESTAMP."""
+    parquet path; an NTZ ts is read as UTC wall-clock."""
     if "/" not in path_or_table and _iceberg_available(spark):
         df = spark.read.format("iceberg").load(path_or_table)
     else:
         df = spark.read.parquet(path_or_table)
-    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return with_utc_ts(df)
 
 
 def _size_conf_bytes(spark: SparkSession, key: str, default: int) -> int:

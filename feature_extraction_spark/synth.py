@@ -263,18 +263,6 @@ def synth_durations(segments: DataFrame) -> DataFrame:
     )
 
 
-def write_transcripts(
-    spark: SparkSession,
-    path: str,
-    n_convs: int,
-    seed: int = 42,
-    **kwargs,
-) -> None:
-    """Materialize the synthetic table to parquet, bucket-partition-friendly."""
-    df = synth_transcripts(spark, n_convs=n_convs, seed=seed, **kwargs)
-    df.write.mode("overwrite").parquet(path)
-
-
 _DOC_VOCAB = [
     "spark", "table", "column", "query", "scan", "filter", "join", "group",
     "sort", "hash", "merge", "batch", "stream", "value", "line", "part",

@@ -197,12 +197,15 @@ def _h(c, dt):
         col = F.round(col, 6)
     return F.coalesce(col.cast("string"), F.lit("<null>"))
 cols = sorted((f.name, f.dataType.typeName()) for f in out.schema.fields)
+# The sum runs in decimal and wraps to a signed 64-bit value here: a bigint
+# sum overflows, which ANSI mode (Spark's default) raises as an error.
 agg = out.select(
-    F.sum(F.xxhash64(*[_h(c, dt) for c, dt in cols])).alias("h"),
+    F.sum(F.xxhash64(*[_h(c, dt) for c, dt in cols]).cast("decimal(38,0)")).alias("h"),
     F.count(F.lit(1)).alias("n"),
 ).collect()[0]
+h = (int(agg["h"]) + 2**63) % 2**64 - 2**63
 print(json.dumps({"cores": cores, "wall_s": wall, "rows": int(agg["n"]),
-                  "hash": int(agg["h"]), "n_turns": n_turns,
+                  "hash": h, "n_turns": n_turns,
                   "turns_per_sec": n_turns / wall,
                   "pinned": os.environ.get("FES_PIN", "1") != "0",
                   "shuffle_partitions": parts,

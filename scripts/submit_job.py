@@ -31,8 +31,6 @@ def main() -> int:
 
     # spark-submit provides the session; builder picks up the submitted conf
     spark = SparkSession.builder.appName("fes-flagship-submit").getOrCreate()
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     # import AFTER session start: proves the zip distributed by --py-files
     # is what resolves the package (driver and executors alike)
@@ -42,10 +40,9 @@ def main() -> int:
         rolling_turn_features,
         with_role_transition,
     )
+    from feature_extraction_spark.sources.io import with_utc_ts
 
-    e = spark.read.parquet(events_path).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
+    e = with_utc_ts(spark.read.parquet(events_path))
     t = e.select(
         F.col("user_id").cast("string").alias("conv_id"),
         F.col("event_id").alias("turn_idx"),
@@ -70,9 +67,12 @@ def main() -> int:
     )
     agg = out.agg(
         F.count(F.lit(1)).alias("rows"),
-        F.sum(F.xxhash64(*out.columns)).alias("hash"),
+        # summed in decimal, wrapped to 64 bits below: a bigint sum
+        # overflows, which ANSI mode (Spark's default) raises as an error
+        F.sum(F.xxhash64(*out.columns).cast("decimal(38,0)")).alias("hash"),
     ).collect()[0]
-    print(json.dumps({"rows": agg["rows"], "hash": agg["hash"]}))
+    h = (int(agg["hash"]) + 2**63) % 2**64 - 2**63
+    print(json.dumps({"rows": agg["rows"], "hash": h}))
     spark.stop()
     return 0
 

@@ -79,9 +79,10 @@ def test_entry_smoke(spark):
 
 
 # conf-sensitive subset: division-by-zero NaN guards (ANSI would throw),
-# timestamp arithmetic (session TZ would shift unix_micros), and the
-# md5-ranked sampler (string collation) — the _pinned wrapper must shield
-# every query from a hostile driver session and restore its confs after
+# timestamp arithmetic and calendar days (a session zone would shift NTZ
+# instants), and the md5-ranked sampler (string collation). The queries set
+# no conf: each must give the oracle's values on a hostile session as it
+# stands, and leave that session's confs as it found them
 HOSTILE_SUBSET = [
     "timing_stats_events",
     "rolling_events_1h",
@@ -89,6 +90,14 @@ HOSTILE_SUBSET = [
     "zscore_events",
     "sessionize_events",
     "stratified_sample_docs",
+    # as-of joins emit the matched right row's epoch microseconds
+    "asof_purchase",
+    "asof_purchase_broadcast",
+    "asof_purchase_forward",
+    "asof_purchase_nearest",
+    "asof_purchase_tolerance",
+    # day and week keys
+    "multilevel_events",
     # r3 encoders/splitters: timestamp-literal cutoffs (TZ), smoothed-mean
     # division + ln of a hash uniform (ANSI), md5-ranked top-k (collation)
     "temporal_split_events",
@@ -110,7 +119,7 @@ def test_query_under_hostile_session_confs(spark, con, name):
         got = QUERIES[name](spark, SF).toPandas()
         exp = con.execute(ORACLES[name]).df()
         _compare(name, got, exp)
-        # the wrapper must RESTORE the hostile confs, not leave its pins
+        # the query must leave the hostile confs as they were
         assert spark.conf.get("spark.sql.ansi.enabled") == "true"
         assert spark.conf.get("spark.sql.session.timeZone") == "America/New_York"
     finally:

@@ -199,29 +199,30 @@ def test_liwc_on_synth(transcripts):
 
 
 def test_liwc_null_text(spark):
-    """NULL-text rows contribute 0 words; an entity whose every turn is NULL
-    still yields a row with NaN proportions (regression: such entities
-    vanished when _num_words came from the exploded token stream)."""
+    """A NULL-text turn is one empty token, like '' in the reference: it
+    adds a word that matches no pattern. An entity whose every turn is NULL
+    keeps its row, equal to that of an entity of empty turns (proportions
+    0.0, not NaN)."""
     import datetime as dt
-
-    import pyspark.sql.functions as F
 
     rows = [
         ("c1", 0, "good bad", dt.datetime(2024, 1, 1)),
         ("c1", 1, None, dt.datetime(2024, 1, 1, 0, 1)),
         ("c2", 0, None, dt.datetime(2024, 1, 1)),
+        ("c3", 0, "", dt.datetime(2024, 1, 1)),
     ]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, text string, ts timestamp"
     )
     d = parse_dic(DIC)
     got = liwc_features(df, d, level="conv").toPandas().set_index("conv_id")
-    assert set(got.index) == {"c1", "c2"}
-    # c1: 2 words ('good bad'), NULL row adds none
-    assert np.isclose(got.loc["c1", "posemo_liwc"], 0.5)
-    assert np.isclose(got.loc["c1", "negemo_liwc"], 0.5)
-    # c2: all NULL -> NaN proportions
-    assert np.isnan(got.loc["c2", "posemo_liwc"])
+    assert set(got.index) == {"c1", "c2", "c3"}
+    # c1: 2 words ('good bad') plus the NULL turn's empty token
+    assert np.isclose(got.loc["c1", "posemo_liwc"], 1 / 3)
+    assert np.isclose(got.loc["c1", "negemo_liwc"], 1 / 3)
+    # c2 (all NULL) == c3 (empty text): one empty token, every proportion 0
+    assert got.loc["c2"].tolist() == got.loc["c3"].tolist()
+    assert (got.loc["c2"] == 0.0).all()
 
 
 def test_lexdiv_null_text_entity_keeps_row(spark):

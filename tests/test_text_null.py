@@ -1,8 +1,8 @@
 """Hostile text for the shared tokenizer: NULL, empty and whitespace-only
-turns through verbosity_stats, lexdiv_stats and the rolling word count,
-with ANSI off and on. NULL text tokenizes like '' (one empty token), so a
-conversation of NULL turns gets the same features as one of empty turns,
-whatever the session's ANSI mode."""
+turns through verbosity_stats, lexdiv_stats, nonverbal_stats, liwc_features
+and the rolling word count, with ANSI off and on. NULL text tokenizes like
+'' (one empty token), so a conversation of NULL turns gets the same
+features as one of empty turns, whatever the session's ANSI mode."""
 
 import datetime as dt
 
@@ -11,6 +11,8 @@ import pytest
 
 from feature_extraction_spark.oracle import kernels as ok
 from feature_extraction_spark.ops.lexdiv import lexdiv_stats
+from feature_extraction_spark.ops.liwc import liwc_features, parse_dic
+from feature_extraction_spark.ops.nonverbal import MARKERS, nonverbal_stats
 from feature_extraction_spark.ops.turn_stats import verbosity_stats
 from feature_extraction_spark.ops.windows import rolling_turn_features
 
@@ -19,6 +21,7 @@ CONVS = {
     "c_empty": ["", "", ""],
     "c_blank": ["  ", " ", "   "],
     "c_mixed": ["hello there friend", None, "", "   ", "a b", None, "x"],
+    "c_marker": ["[laughter] hi", None, None],
 }
 VERBOSITY = [
     "wc_mean", "wc_median", "wc_stdev", "wc_min", "wc_max", "total_count",
@@ -73,6 +76,31 @@ def test_lexdiv_hostile_text(hostile):
     for conv, texts in CONVS.items():
         _close(got[conv], ok.lexdiv_stats(texts), LEXDIV, conv)
     assert [got["c_null"][c] for c in LEXDIV] == [got["c_empty"][c] for c in LEXDIV]
+
+
+def test_nonverbal_hostile_text(hostile):
+    got = _rows(nonverbal_stats(hostile, level="conv"))
+    assert set(got) == set(CONVS)
+    for conv, texts in CONVS.items():
+        _close(got[conv], ok.nonverbal_stats(texts), list(MARKERS), conv)
+    # the two NULL turns are one empty token each: 1 laughter in 4 tokens
+    assert got["c_marker"]["laughter"] == 0.25
+    assert [got["c_null"][c] for c in MARKERS] == [got["c_empty"][c] for c in MARKERS]
+
+
+def test_liwc_hostile_text(hostile):
+    """Every entity gets the row it would get with each NULL turn replaced
+    by ''."""
+    dic = parse_dic("%\n1\tposemo\n%\nhello\t1\nthe*\t1\nhi\t1\n")
+    cols = [f"{c}_liwc" for c in dic.categories]
+    got = _rows(liwc_features(hostile, dic, level="conv"))
+    empty = hostile.fillna({"text": ""})
+    exp = _rows(liwc_features(empty, dic, level="conv"))
+    assert set(got) == set(CONVS)
+    for conv in CONVS:
+        _close(got[conv], exp[conv], cols, conv)
+    assert got["c_null"]["posemo_liwc"] == 0.0
+    assert got["c_marker"]["posemo_liwc"] == 0.25
 
 
 def test_rolling_wc_hostile_text(hostile):
