@@ -172,15 +172,10 @@ def q_minhash_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands (4 rows/band): P(miss) per 0.8-similar pair ~(1-0.8^4)^32 = 4e-8,
     so the output equals the exact Jaccard>=0.8 pair set and the query is
     value-checked against the plain-SQL oracle (verified equal at sf0.001
-    and sf0.01). Runs the one-permutation (OPH) signature path — the
-    corpus-scale configuration; the k-hash path is covered by pytest
-    recall tests with the same exact-verification guarantee."""
+    and sf0.01). 128/32 is the op's default."""
     from feature_extraction_spark.ops.dedup import minhash_lsh_dedup
 
-    out = minhash_lsh_dedup(
-        _docs(spark, sf_dir), threshold=0.8, num_hashes=128, bands=32,
-        method="oph",
-    )
+    out = minhash_lsh_dedup(_docs(spark, sf_dir), threshold=0.8)
     return _r6(out, ["jaccard"])
 
 
@@ -203,12 +198,9 @@ def q_minhash_incremental_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     old = d.filter(F.col("doc_id") % 2 == 0)
     new = d.filter(F.col("doc_id") % 2 == 1)
-    cfg = dict(num_hashes=128, bands=32, method="oph")
-    old_pairs = minhash_lsh_dedup(old, threshold=0.8, **cfg)
-    state = minhash_band_state(old, **cfg)
-    inc_pairs, _ = minhash_lsh_dedup_incremental(
-        state, old, new, threshold=0.8, **cfg
-    )
+    old_pairs = minhash_lsh_dedup(old, threshold=0.8)
+    state = minhash_band_state(old)
+    inc_pairs, _ = minhash_lsh_dedup_incremental(state, old, new, threshold=0.8)
     return _r6(old_pairs.unionByName(inc_pairs), ["jaccard"])
 
 
@@ -232,9 +224,7 @@ def q_stream_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     state = tempfile.mkdtemp(prefix="stream_dedup_state_")
     try:
-        up = make_dedup_upserter(
-            state, threshold=0.8, num_hashes=128, bands=32, method="oph"
-        )
+        up = make_dedup_upserter(state, threshold=0.8)
         up(d.filter(F.col("doc_id") % 2 == 0), 0)
         up(d.filter(F.col("doc_id") % 2 == 1), 1)
         pairs_t = f"{state}/pairs"
@@ -856,33 +846,16 @@ def q_multilevel_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN probe, value-verified: the driver runs the FULL-PROBE config
-    (nprobe = n_centroids), whose candidate set is the whole table by
-    construction, so the output is exactly the brute-force cosine top-k and
-    shares its DuckDB oracle regardless of how the seeded Lloyd quantizer
-    clustered. The pruned-nprobe path (the actual scale story — scan
-    nprobe/n_centroids of the data) keeps its recall-vs-exact coverage in
-    tests/test_multilevel_ivf.py."""
-    from feature_extraction_spark.ops.similarity import ivf_topk, ivf_train
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = ivf_train(emb, n_centroids=8, iters=1, seed=42)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    out = ivf_topk(emb, [float(x) for x in qvec], cents, k=10, nprobe=8)
-    return out.select("vec_id", F.round("cosine", 6).alias("cosine"))
-
-
 def q_ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PERSISTED-index IVF probe (the serving path ivf_topk lacks: build
-    once, probe many): build_ann_index snapshot-commits the centroids and
-    writes assignments partitioned by ivf_cluster; ivf_topk_indexed then
-    reads only the probed partitions — no Lloyd jobs, no assignment
-    re-scan, partition pruning on the cluster filter (plan-asserted in
-    tests/test_plan_shapes.py). Run full-probe here (nprobe=n_centroids) so
-    the output is exactly the brute-force cosine top-k and shares its
-    oracle; the tiny result is pinned driver-side so the temp index dir is
-    removed immediately (no per-invocation leak)."""
+    """PERSISTED-index IVF probe (build once, probe many): build_ann_index
+    snapshot-commits the centroids and writes assignments partitioned by
+    ivf_cluster; ivf_topk_indexed then reads only the probed partitions —
+    no Lloyd jobs, no assignment re-scan, partition pruning on the cluster
+    filter (plan-asserted in tests/test_multilevel_ivf.py). Run full-probe
+    here (nprobe=n_centroids) so the output is exactly the brute-force
+    cosine top-k and shares its oracle; the tiny result is pinned
+    driver-side so the temp index dir is removed immediately (no
+    per-invocation leak)."""
     import shutil
     import tempfile
 
@@ -1684,19 +1657,6 @@ def q_neardup_pairs_emb_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
-def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH top-k, re-ranked exactly. With 2 planes x 16 tables
-    the candidate buckets contain the true top-10 at sf0.001/sf0.01
-    (verified), so the result equals exact cosine_topk and the query is
-    value-checked against the same SQL oracle."""
-    from feature_extraction_spark.ops.similarity import lsh_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    out = lsh_topk(emb, [float(x) for x in qvec], k=10, planes=2, tables=16)
-    return out.select("vec_id", F.round("cosine", 6).alias("cosine"))
-
-
 def q_vocab_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11 document-frequency vocabulary filter as a first-class op (the
     reference buried it inside gensim Dictionary.filter_extremes)."""
@@ -2229,11 +2189,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_model_docs": q_quality_model_docs,
         "interval_join_events": q_interval_join_events,
         "hist_quantile_events": q_hist_quantile_events,
-        # -- 11 green in r02, rotated out of r03's 50-row window
+        # -- green in r02, rotated out of r03's 50-row window
         "tpch_q3": q_tpch_q3,
         "cosine_topk": q_cosine_topk,
         "knn_join": q_knn_join,
-        "lsh_topk": q_lsh_topk,
         "neardup_pairs_emb": q_neardup_pairs_emb,
         "neardup_pairs_emb_lsh": q_neardup_pairs_emb_lsh,
         "dedup_clusters_docs": q_dedup_clusters_docs,
@@ -2311,7 +2270,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_planted_docs": q_graph_planted_docs,
         "phrase_merge_docs": q_phrase_merge_docs,
         "multilevel_events": q_multilevel_events,
-        "ivf_topk": q_ivf_topk,
         "multimodal_features": q_multimodal_features,
         "bmp_stats_media": q_bmp_stats_media,
         "hypothesis_mean_docs": q_hypothesis_mean_docs,
@@ -2331,7 +2289,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # row: liwc_docs (its NULL-text entity is one empty token now, so its
 # proportions are 0.0, not NaN) and jsonl_parse_events, shuffle_order_docs
 # and hard_negatives_emb (changed in r5, last row from r04). Then comes the
-# r05 window less tpch_q1, ivf_topk and bmp_stats_media, which read no text
+# r05 window less tpch_q1 and bmp_stats_media, which read no text
 # or timestamp and keep their green r05 rows. Every query past position 50
 # has a green row in r04 or r05. The NULL-convention variants
 # (timing_stats_events' NULL word_timing, liwc_docs, lm_ppl_docs' NULL/
@@ -4398,11 +4356,10 @@ LIMIT 25
         "cosine_topk": cosine_topk,
         "knn_join": knn,
         "neardup_pairs_emb": neardup_emb,
-        # LSH queries re-rank/verify candidates EXACTLY and run full-recall
-        # configs on the driver testdata (verified), so the exact-cosine
-        # oracles apply at value level.
+        # the LSH query verifies candidates EXACTLY and runs a full-recall
+        # config on the driver testdata (verified), so the exact-cosine
+        # oracle applies at value level.
         "neardup_pairs_emb_lsh": neardup_emb,
-        "lsh_topk": cosine_topk,
         "graph_docs": _graph_docs_sql(),
         # iterative graph metrics over PLANTED closed-form structures:
         # pure per-row arithmetic on doc_id (see q_graph_planted_docs)
@@ -4722,11 +4679,9 @@ GROUP BY e.label, n.n_rows, e.dim
 """,
         "semdedup_emb": semdedup_emb,
         "stratified_sample_docs": stratified_sample,
-        # ivf_topk runs full-probe in the driver (candidates = whole table),
-        # so its output is the exact brute-force top-k — same oracle as
-        # cosine_topk. Pruned-nprobe recall stays pytest-covered.
-        "ivf_topk": cosine_topk,
-        # full-probe indexed path == brute-force top-k (same trick)
+        # ivf_topk_indexed runs full-probe in the driver (candidates = whole
+        # table), so its output is the exact brute-force top-k — same
+        # oracle as cosine_topk. Pruned-nprobe recall stays pytest-covered.
         "ivf_topk_indexed": cosine_topk,
         "multimodal_features": _multimodal_sql(),
         # real BMP codec round-trip: the oracle re-derives the channel

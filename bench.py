@@ -234,8 +234,7 @@ def main() -> None:
                 "overwrite"
             ).parquet(os.path.join(emb_dir, "embeddings.parquet"))
         tier3 = [
-            "cosine_topk", "lsh_topk", "knn_join", "ivf_topk",
-            "ivf_topk_indexed", "semdedup_emb",
+            "cosine_topk", "knn_join", "ivf_topk_indexed", "semdedup_emb",
             "pq_codes_emb", "pq_adc_topk_emb",
         ]
         for name in tier3:

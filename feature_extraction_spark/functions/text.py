@@ -64,3 +64,20 @@ def strip_punct_expr(col: Column) -> Column:
     """Remove punctuation but keep apostrophes/word chars/whitespace
     (reference: text_features/text_util.py:104-109, regex [^\\w\\d'\\s]+)."""
     return F.regexp_replace(col, r"[^\w\d'\s]+", "")
+
+
+def ngrams_expr(words: Column, n: int) -> Column:
+    """Word n-grams of an array<string>, in order, each joined by one
+    space; empty when there are fewer than ``n`` words, NULL for NULL.
+
+    Built as ``n`` shifted slices zipped into one array and a single
+    ``transform`` over it. The lambda reads only its own element, so the
+    ``words`` expression (regex normalization included) is evaluated n
+    times per row. A ``transform(sequence(1, k), i -> slice(words, i, n))``
+    captures ``words`` inside the lambda and re-evaluates it for every
+    gram: O(words²) per document."""
+    k = F.greatest(F.size(words) - (n - 1), F.lit(0))
+    zipped = F.arrays_zip(*[F.slice(words, i + 1, k) for i in range(n)])
+    return F.transform(
+        zipped, lambda z: F.concat_ws(" ", *[z[str(i)] for i in range(n)])
+    )

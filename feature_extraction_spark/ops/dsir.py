@@ -51,17 +51,13 @@ def gram_buckets_expr(
     salt)) mod n_buckets — the same single-key convention as
     ops/chunk._salted_md5, so oracles replay it as
     ``CAST('0x' || substr(md5(g || chr(31) || salt), 1, 8) AS BIGINT)``."""
-    from feature_extraction_spark.functions.text import ws_tokens_expr
+    from feature_extraction_spark.functions.text import (
+        ngrams_expr,
+        ws_tokens_expr,
+    )
 
     words = ws_tokens_expr(F.lower(F.col(text_col)))
-    bigrams = F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - 1),
-            lambda i: F.concat_ws(" ", F.slice(words, i, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    grams = F.concat(words, bigrams)
+    grams = F.concat(words, ngrams_expr(words, 2))
     return F.transform(
         grams,
         lambda g: (

@@ -26,7 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from feature_extraction_spark.functions.text import tokenize_expr
+from feature_extraction_spark.functions.text import ngrams_expr, tokenize_expr
 from feature_extraction_spark.ops.levels import keys_for
 from feature_extraction_spark.sources.io import ensure_parallelism
 
@@ -81,28 +81,19 @@ def liwc_features(
     words = tokenize_expr(F.col(text_col))
     transcripts = ensure_parallelism(transcripts.select(*keys, text_col))
 
-    # unigrams + within-turn bigrams/trigrams, all as one token stream
-    # (n-grams via native slice — no shuffle beyond the final aggregation)
-    def grams(n: int):
-        k = F.size(words) - (n - 1)
-        return F.when(
-            k >= 1,
-            F.transform(
-                F.sequence(F.lit(1), k),
-                lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    # ONE token stream shared by both matchers (exact equi-join, wildcard
-    # prefix join). The gram construction is a higher-order-function chain
-    # (interpreted, outside codegen); the explicit repartition gives both
-    # consumers the same exchange, so the chain is evaluated once per
-    # shuffle instead of once per branch. All gram orders flow into BOTH
+    # unigrams + within-turn bigrams/trigrams as ONE token stream, shared
+    # by both matchers (exact equi-join, wildcard prefix join); no shuffle
+    # beyond the final aggregation. The gram construction is a
+    # higher-order-function chain (interpreted, outside codegen); the
+    # explicit repartition gives both consumers the same exchange, so the
+    # chain is evaluated once per shuffle instead of once per branch. All gram orders flow into BOTH
     # matchers: a wildcard stem is a *character* prefix, so 'go*' legally
     # matches the bigram 'go home' (reference regex semantics).
     toks = transcripts.select(
         *keys,
-        F.explode(F.concat(words, grams(2), grams(3))).alias("tok"),
+        F.explode(
+            F.concat(words, ngrams_expr(words, 2), ngrams_expr(words, 3))
+        ).alias("tok"),
     )
     # hash over (keys, tok): balanced even when one entity dominates (the
     # downstream agg is map-side-combinable and the dict joins broadcast,

@@ -18,9 +18,7 @@ JVM-side outside whole-stage codegen, still zero Python in the hot path):
 ``pq_encode`` is a map-only projection, ``pq_adc_topk`` is a projection +
 TakeOrderedAndProject (per-partition heaps — no global sort, no shuffle
 beyond the final k rows), and training touches the corpus once per Lloyd
-iteration with map-combinable per-(subspace, code, dim) averages. Combine
-with the persisted IVF index (similarity.build_ann_index) for IVFADC:
-coarse cluster pruning + PQ residual scoring.
+iteration with map-combinable per-(subspace, code, dim) averages.
 
 Reference scope note: the reference repo (kmatton/Feature-Extraction) has
 no ANN/embedding surface; this module is part of the additive
@@ -37,8 +35,6 @@ __all__ = [
     "pq_encode",
     "pq_adc_topk",
     "adc_lut",
-    "build_ivfadc_index",
-    "ivfadc_topk",
 ]
 
 
@@ -223,158 +219,3 @@ def pq_adc_topk(
         .limit(k)
     )
 
-
-# ------------------------------------------------------------------ IVFADC
-
-
-def build_ivfadc_index(
-    df: DataFrame,
-    index_dir: str,
-    n_centroids: int = 8,
-    ivf_iters: int = 2,
-    m: int = 8,
-    k: int = 16,
-    pq_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> tuple[list[list[float]], list[list[list[float]]]]:
-    """Persist an IVFADC index (Jegou 2011 §IV; the FAISS billion-scale
-    layout): a coarse IVF quantizer partitions the corpus, and PQ encodes
-    each vector's RESIDUAL (vector - its coarse centroid) — residual
-    magnitudes are much smaller than vector magnitudes, so the same
-    codebook budget quantizes far more precisely. Persisted layout:
-
-    - ``{index_dir}/coarse_centroids`` — snapshot-committed (atomic swap)
-    - ``{index_dir}/pq_codebooks``     — snapshot-committed (j, c, centroid)
-    - ``{index_dir}/codes``            — (id, pq_code) PARTITIONED BY
-      ivf_cluster: a probe scans nprobe/n_centroids of the table, reading
-      only m small ints per row instead of the float vector.
-
-    The coarse quantizer is the engine's cosine IVF (similarity.ivf_train
-    — assignment only partitions the space); ADC scoring over residuals
-    approximates exact-L2 ranking within PQ quantization error.
-    Zero-norm vectors (NULL coarse cluster) are excluded from the index —
-    the same contract as ivf_topk/build_ann_index, which cannot rank them
-    either. Training cost: ivf_iters + pq_iters corpus passes, all
-    map-combinable; every collect is centroid/codebook-sized."""
-    from ..sources.io import write_table
-    from ..sources.snapshots import commit_snapshot
-    from .similarity import ivf_assign, ivf_train
-
-    spark = df.sparkSession
-    coarse = ivf_train(
-        df, n_centroids=n_centroids, iters=ivf_iters, id_col=id_col,
-        vec_col=vec_col, seed=seed,
-    )
-    assigned = ivf_assign(df, coarse, vec_col=vec_col).filter(
-        F.col("ivf_cluster").isNotNull()
-    )
-    cent_lit = F.array(
-        *[F.array(*[F.lit(float(x)) for x in cv]) for cv in coarse]
-    )
-    resid = F.zip_with(
-        F.col(vec_col).cast("array<double>"),
-        F.element_at(cent_lit, F.col("ivf_cluster") + F.lit(1)),
-        lambda a, b: a - b,
-    )
-    rdf = assigned.withColumn("_resid", resid)
-    codebooks = pq_train(
-        rdf, m=m, k=k, iters=pq_iters, id_col=id_col, vec_col="_resid",
-        dim=len(coarse[0]),
-    )
-    codes = pq_encode(
-        rdf, codebooks, id_col=id_col, vec_col="_resid",
-        keep_cols=["ivf_cluster"],
-    )
-    cent_df = spark.createDataFrame(
-        [(c, [float(x) for x in v]) for c, v in enumerate(coarse)],
-        "ivf_cluster int, centroid array<double>",
-    )
-    commit_snapshot(cent_df, f"{index_dir}/coarse_centroids", mode="overwrite")
-    cb_df = spark.createDataFrame(
-        [
-            (j, c, [float(x) for x in cent])
-            for j, cents in enumerate(codebooks)
-            for c, cent in enumerate(cents)
-        ],
-        "j int, c int, centroid array<double>",
-    )
-    commit_snapshot(cb_df, f"{index_dir}/pq_codebooks", mode="overwrite")
-    write_table(codes, f"{index_dir}/codes", partition_by=["ivf_cluster"])
-    return coarse, codebooks
-
-
-def ivfadc_topk(
-    spark,
-    index_dir: str,
-    query: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Probe a persisted IVFADC index: coarse centroids are ranked against
-    the query driver-side (n_centroids rows of pure Python), ONE residual
-    ADC lookup table is built per probed cluster (nprobe * m * k floats),
-    and only the nprobe ``codes`` partitions are scanned — partition
-    pruning on ``ivf_cluster IN (...)``, per-row scoring = a CASE over
-    nprobe branches each doing m array lookups, top-k =
-    TakeOrderedAndProject. No Lloyd jobs, no exchange, no float vectors
-    read: the serving cost is nprobe/n_centroids of a scan over m-byte-ish
-    codes. Ascending approximate-L2 distances, ties broken on id."""
-    import math
-
-    from ..sources.snapshots import last_committed_version, read_snapshot
-
-    def _read(table):
-        t = f"{index_dir}/{table}"
-        return read_snapshot(spark, t, last_committed_version(spark, t))
-
-    coarse = {
-        r["ivf_cluster"]: list(r["centroid"])
-        for r in _read("coarse_centroids").collect()
-    }
-    cb_rows = _read("pq_codebooks").collect()
-    m = max(r["j"] for r in cb_rows) + 1
-    kk = max(r["c"] for r in cb_rows) + 1
-    codebooks: list[list[list[float]]] = [[None] * kk for _ in range(m)]
-    for r in cb_rows:
-        codebooks[r["j"]][r["c"]] = list(r["centroid"])
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb) if na and nb else float("-inf")
-
-    order = sorted(coarse, key=lambda c: -cos(query, coarse[c]))
-    probe = [int(c) for c in order[:nprobe]]
-    expr = None
-    for c in probe:
-        q_res = [q - cv for q, cv in zip(query, coarse[c])]
-        lut = adc_lut(codebooks, q_res)
-        lut_lit = F.array(
-            *[F.array(*[F.lit(v) for v in row]) for row in lut]
-        )
-        d_c = F.aggregate(
-            F.zip_with(
-                F.col("pq_code"),
-                lut_lit,
-                lambda code, row: F.element_at(row, code + F.lit(1)),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        expr = (
-            F.when(F.col("ivf_cluster") == c, d_c)
-            if expr is None
-            else expr.when(F.col("ivf_cluster") == c, d_c)
-        )
-    codes = spark.read.parquet(f"{index_dir}/codes").filter(
-        F.col("ivf_cluster").isin(probe)
-    )
-    return (
-        codes.select(F.col(id_col), expr.alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.col(id_col))
-        .limit(k)
-    )

@@ -3,12 +3,12 @@
 - cosine_topk: brute-force exact top-k against one query vector — the
   baseline. Dot products via zip_with/aggregate (JVM, codegen), global top-k
   via orderBy+limit (Spark runs TakeOrdered, no full sort materialization).
-- lsh_topk: random-hyperplane LSH bucketing (deterministic seeded planes) —
-  the scale path: candidates = rows sharing the query's bucket in >=1 of
-  ``tables`` hash tables, re-ranked exactly. At 100 TB this turns a full
-  scan into a bucket-pruned scan (bucket column is derivable at write time
-  and partition-prunable).
+- build_ann_index / ivf_topk_indexed: the ANN path — an IVF index built
+  once (centroids + assignments partitioned by cluster), then each probe
+  scans only the ``nprobe`` nearest partitions.
 - knn_join_exact: small-query-set exact kNN via broadcast of the queries.
+- cosine_neardup_pairs: embedding near-dup pairs, random-hyperplane LSH
+  banding (``lsh_bucket_expr``) + exact cosine verification.
 """
 
 from __future__ import annotations
@@ -32,7 +32,9 @@ def _norm(a: Column) -> Column:
 
 
 def cosine_expr(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    """Cosine similarity; NULL when either vector has zero norm (a bare
+    division would raise DIVIDE_BY_ZERO with ANSI on)."""
+    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
 def cosine_topk(
@@ -80,36 +82,6 @@ def lsh_bucket_expr(vec: Column, dim: int, planes: int, table: int, seed: int) -
     for b in bits:
         out = F.shiftleft(out, 1).bitwiseOR(b)
     return out
-
-
-def lsh_topk(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes: int = 8,
-    tables: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """LSH top-k with the query's buckets computed inside Spark (exact same
-    hash as the data side — no Python xxhash reimplementation)."""
-    dim = len(query)
-    vec = F.col(vec_col).cast("array<double>")
-    q = F.array(*[F.lit(float(x)) for x in query])
-
-    cond = None
-    for t in range(tables):
-        data_b = lsh_bucket_expr(vec, dim, planes, t, seed)
-        query_b = lsh_bucket_expr(q, dim, planes, t, seed)
-        c = data_b == query_b
-        cond = c if cond is None else (cond | c)
-    cands = df.filter(cond)
-    return (
-        cands.select(F.col(id_col), cosine_expr(vec, q).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
 
 
 def knn_join_exact(
@@ -202,10 +174,10 @@ def hard_negatives(
     per-query row_number window receives at most k x P x |Q| candidate
     rows (P = input partitions) instead of |corpus| x |Q| — the round-4
     shape that concentrated the whole scored corpus onto |Q| reducers is
-    gone (plan + bound pinned in tests/test_similarity_ann.py).
+    gone (plan + bound pinned in tests/test_dedup_similarity.py).
     ``partition_prefilter=False`` keeps the pure-JVM window form for
     tiny corpora. At corpus scales where exact scoring itself is too
-    wide, generate candidates with the persisted IVF/IVFADC index first
+    wide, generate candidates with the persisted IVF index first
     and feed THAT as ``data`` — this op composes unchanged.
     """
     from pyspark.sql import Window
@@ -308,42 +280,6 @@ def ivf_train(
     return centroids
 
 
-def ivf_topk(
-    df: DataFrame,
-    query: list[float],
-    centroids: list[list[float]],
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF probe: rank centroids against the query driver-side (pure Python
-    on n_centroids vectors), scan only the ``nprobe`` nearest clusters,
-    re-rank those candidates exactly. With the cluster column materialized
-    as a partition key, the filter becomes partition pruning — the 100 TB
-    path scans nprobe/n_centroids of the table."""
-    import math
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb) if na and nb else float("nan")
-
-    order = sorted(range(len(centroids)), key=lambda c: -cos(query, centroids[c]))
-    probe = order[:nprobe]
-    vec = F.col(vec_col).cast("array<double>")
-    q = F.array(*[F.lit(float(x)) for x in query])
-    cands = ivf_assign(df, centroids, vec_col=vec_col).filter(
-        F.col("ivf_cluster").isin(probe)
-    )
-    return (
-        cands.select(F.col(id_col), cosine_expr(vec, q).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
 def build_ann_index(
     df: DataFrame,
     index_dir: str,
@@ -361,9 +297,8 @@ def build_ann_index(
     built once and probed many times: ``ivf_topk_indexed`` reads ONLY the
     nprobe nearest partitions (partition pruning — no Lloyd jobs, no
     re-assignment scan, no exchange) instead of re-deriving the index per
-    query the way ``ivf_train`` + ``ivf_topk`` do. Zero-norm vectors
-    (NULL cluster) land in the Hive default partition and are never
-    probed — same contract as ivf_topk, which can't rank them either."""
+    query. Zero-norm vectors (NULL cluster) land in the Hive default
+    partition and are never probed: they have no cosine to rank."""
     from ..sources.io import write_table
     from ..sources.snapshots import commit_snapshot
 
@@ -401,7 +336,11 @@ def ivf_topk_indexed(
     assignment partitions are scanned (`ivf_cluster IN (...)` is a
     partition filter — the plan has no Lloyd jobs and no exchange; the
     top-k is TakeOrderedAndProject). This is the serving path that makes
-    IVF pay at scale: cost = nprobe/n_centroids of one table scan."""
+    IVF pay at scale: cost = nprobe/n_centroids of one table scan.
+
+    A zero-norm centroid (``ivf_train`` keeps a seed no row is assigned
+    to, e.g. a zero-norm seed row) ranks last: a NaN sort key would leave
+    ``sorted`` unordered around it."""
     import math
 
     from ..sources.snapshots import last_committed_version, read_snapshot
@@ -416,7 +355,7 @@ def ivf_topk_indexed(
         d = sum(x * y for x, y in zip(a, b))
         na = math.sqrt(sum(x * x for x in a))
         nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb) if na and nb else float("nan")
+        return d / (na * nb) if na and nb else float("-inf")
 
     order = sorted(centroids, key=lambda c: -cos(query, centroids[c]))
     probe = [int(c) for c in order[:nprobe]]

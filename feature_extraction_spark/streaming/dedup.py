@@ -53,9 +53,10 @@ def make_dedup_upserter(
 ):
     """The ``foreachBatch`` callable maintaining the three dedup states.
 
-    ``lsh_kwargs`` (num_hashes/bands/shingle_n/seed/method) must stay
-    constant for the lifetime of a state directory — signatures are pure
-    functions of them, and states under different configs do not compose.
+    ``lsh_kwargs`` (num_hashes/bands/shingle_n/seed; 128 hashes in 32
+    bands by default) must stay constant for the lifetime of a state
+    directory — signatures are pure functions of them, and states under
+    different configs do not compose.
     """
     bands_t = posixpath.join(state_dir, "bands")
     docs_t = posixpath.join(state_dir, "docs")

@@ -55,6 +55,12 @@ def main() -> int:
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
     names = [a for a in args if "/" not in a]
 
+    # sys.path reaches only this process; the pandas-UDF queries' Python
+    # workers import the package through PYTHONPATH, so a run started
+    # outside the repository needs it there too
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark("driver_sim")
     qs = entry.queries()
     oracles = entry.oracle_sql()

@@ -12,7 +12,7 @@ Usage: python scripts/scaling_bench.py [n_convs] [seed] [reps]
 
 Env knobs:
   FES_JOB=flagship|dedup|ann
-                           job class (dedup = OPH MinHash-LSH + exact
+                           job class (dedup = MinHash-LSH + exact
                            verification over synth_documents; first CLI
                            arg is then n_docs; writes scaling_dedup.json.
                            ann = 64 probes of the PERSISTED IVF index
@@ -103,13 +103,13 @@ if job == "ann":
 
 def build():
     if job == "dedup":
-        # corpus path: OPH MinHash-LSH + exact-Jaccard verification — the
-        # driver query's exact configuration (128 perms x 32 bands). The
-        # candidate set materializes eagerly at CONSTRUCTION, so the job
-        # is rebuilt inside every forced pass to count that work.
+        # corpus path: MinHash-LSH + exact-Jaccard verification — the
+        # driver query's exact configuration (the 128 perms x 32 bands
+        # default). The candidate set materializes eagerly at
+        # CONSTRUCTION, so the job is rebuilt inside every forced pass to
+        # count that work.
         from feature_extraction_spark.ops.dedup import minhash_lsh_dedup
-        return minhash_lsh_dedup(t, threshold=0.8, num_hashes=128,
-                                 bands=32, method="oph")
+        return minhash_lsh_dedup(t, threshold=0.8)
     if job == "ann":
         # serving path: 64 probes of the persisted IVF index batched as
         # ONE union plan (a serve tier dispatches many probes

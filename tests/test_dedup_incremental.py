@@ -13,7 +13,7 @@ from feature_extraction_spark.ops.dedup import (
 from feature_extraction_spark.synth import synth_documents
 
 # full-recall config at threshold 0.8: P(miss) ~ (1 - 0.8^4)^32 = 4e-8
-CFG = dict(num_hashes=128, bands=32, method="oph")
+CFG = dict(num_hashes=128, bands=32)
 
 
 @pytest.fixture(scope="module")

@@ -1,5 +1,8 @@
 """multi_level_agg (GROUPING SETS single-pass levels) and IVF ANN tests."""
 
+import math
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -10,9 +13,11 @@ from feature_extraction_spark.ops.levels import (
     with_entity_keys,
 )
 from feature_extraction_spark.ops.similarity import (
+    build_ann_index,
+    cosine_neardup_pairs,
     cosine_topk,
     ivf_assign,
-    ivf_topk,
+    ivf_topk_indexed,
     ivf_train,
 )
 
@@ -89,41 +94,22 @@ def test_ivf_assign_covers_all(spark, embeddings):
     assert a["ivf_cluster"].between(0, 5).all()
 
 
-def test_ivf_topk_recall_vs_exact(spark, embeddings):
-    cents = ivf_train(embeddings, n_centroids=6, iters=2, seed=42)
+def test_ivf_topk_recall_vs_exact(spark, embeddings, tmp_path):
+    """A pruned probe (3 of 6 partitions) keeps the exact top-10."""
+    idx = str(tmp_path / "ann_recall")
+    build_ann_index(embeddings, idx, n_centroids=6, iters=2, seed=42)
     q = embeddings.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
+    q = [float(x) for x in q]
     exact = {r["vec_id"] for r in cosine_topk(embeddings, q, k=10).collect()}
     approx = {
         r["vec_id"]
-        for r in ivf_topk(embeddings, q, cents, k=10, nprobe=3).collect()
+        for r in ivf_topk_indexed(spark, idx, q, k=10, nprobe=3).collect()
     }
     recall = len(exact & approx) / 10
     assert recall >= 0.9, (recall, exact, approx)
 
 
-def test_ivf_prunes_scan(spark, embeddings):
-    """nprobe < n_centroids must scan strictly fewer candidate rows."""
-    cents = ivf_train(embeddings, n_centroids=6, iters=2, seed=42)
-    q = embeddings.filter(F.col("vec_id") == 1).collect()[0]["embedding"]
-    assigned = ivf_assign(embeddings, cents)
-    total = assigned.count()
-    # candidates = rows in the probed clusters only
-    import math
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / (
-            math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b))
-        )
-
-    order = sorted(range(len(cents)), key=lambda c: -cos(q, cents[c]))
-    probed = assigned.filter(F.col("ivf_cluster").isin(order[:2])).count()
-    assert 0 < probed < total
-
-
 def test_cosine_neardup_lsh_recall(spark, embeddings):
-    from feature_extraction_spark.ops.similarity import cosine_neardup_pairs
-
     exact = {
         (r["id_a"], r["id_b"])
         for r in cosine_neardup_pairs(
@@ -159,14 +145,10 @@ def test_with_entity_keys_preserves_caller_columns(spark):
 
 
 def test_ann_index_persisted_probe_matches_fresh(spark, embeddings, tmp_path):
-    """build_ann_index + ivf_topk_indexed == ivf_train + ivf_topk at the
-    same (n_centroids, iters, seed, nprobe) — the persisted index changes
-    where the work happens, never the answer."""
-    from feature_extraction_spark.ops.similarity import (
-        build_ann_index,
-        ivf_topk_indexed,
-    )
-
+    """build_ann_index commits ivf_train's centroids, and a probe equals
+    the exact re-rank of the nprobe nearest clusters of a fresh
+    ivf_train + ivf_assign at the same (n_centroids, iters, seed) — the
+    persisted index changes where the work happens, never the answer."""
     idx = str(tmp_path / "ann")
     cents = build_ann_index(embeddings, idx, n_centroids=6, iters=2, seed=42)
     fresh_cents = ivf_train(embeddings, n_centroids=6, iters=2, seed=42)
@@ -174,7 +156,17 @@ def test_ann_index_persisted_probe_matches_fresh(spark, embeddings, tmp_path):
 
     q = embeddings.filter(F.col("vec_id") == 5).collect()[0]["embedding"]
     q = [float(x) for x in q]
-    fresh = ivf_topk(embeddings, q, fresh_cents, k=8, nprobe=3).collect()
+
+    def cos(a, b):
+        return sum(x * y for x, y in zip(a, b)) / (
+            math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b))
+        )
+
+    probe = sorted(range(6), key=lambda c: -cos(q, fresh_cents[c]))[:3]
+    cands = ivf_assign(embeddings, fresh_cents).filter(
+        F.col("ivf_cluster").isin(probe)
+    )
+    fresh = cosine_topk(cands, q, k=8).collect()
     idxd = ivf_topk_indexed(spark, idx, q, k=8, nprobe=3).collect()
     assert [r.vec_id for r in idxd] == [r.vec_id for r in fresh]
     assert np.allclose(
@@ -187,11 +179,6 @@ def test_ann_index_probe_plan_prunes_partitions(spark, embeddings, tmp_path):
     a partition-pruned scan + projection + TakeOrderedAndProject. Partition
     pruning is visible as the cluster filter landing in the scan's
     PartitionFilters."""
-    from feature_extraction_spark.ops.similarity import (
-        build_ann_index,
-        ivf_topk_indexed,
-    )
-
     idx = str(tmp_path / "ann2")
     build_ann_index(embeddings, idx, n_centroids=6, iters=1, seed=42)
     q = embeddings.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
@@ -199,11 +186,74 @@ def test_ann_index_probe_plan_prunes_partitions(spark, embeddings, tmp_path):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "TakeOrderedAndProject" in plan
-    assert "PartitionFilters: [" in plan
-    # the pruned scan reads 2 of 6 cluster partitions
-    pruned = out.select(F.countDistinct("vec_id")).collect()[0][0]
-    total = embeddings.count()
-    assert 0 < pruned < total
+    # the pruned scan reads 2 of 6 cluster partitions: fewer rows than
+    # the table holds
+    m = re.search(r"PartitionFilters: \[.*ivf_cluster#\d+ IN \(([\d, ]+)\)", plan)
+    assert m, plan
+    probed = [int(c) for c in m.group(1).split(",")]
+    assert len(probed) == 2
+    scanned = (
+        spark.read.parquet(f"{idx}/assignments")
+        .filter(F.col("ivf_cluster").isin(probed))
+        .count()
+    )
+    assert 0 < scanned < embeddings.count()
+
+
+@pytest.fixture(params=["false", "true"], ids=["ansi_off", "ansi_on"])
+def ansi(spark, request):
+    saved = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", request.param)
+    yield request.param
+    spark.conf.set("spark.sql.ansi.enabled", saved)
+
+
+# eight unit directions 45 degrees apart, plus a zero-norm row (vec_id 8)
+_DIRS = [
+    (i, [float(round(math.cos(i * math.pi / 4), 12)),
+         float(round(math.sin(i * math.pi / 4), 12))])
+    for i in range(8)
+]
+_ZERO = (8, [0.0, 0.0])
+
+
+def test_zero_norm_embedding_gives_null_cosine(spark, ansi):
+    """A zero-norm embedding has cosine NULL, in either ANSI mode: it ranks
+    last in cosine_topk, assigns to no IVF cluster, and pairs with
+    nothing."""
+    df = spark.createDataFrame(
+        _DIRS + [_ZERO], "vec_id long, embedding array<double>"
+    )
+    top = cosine_topk(df, [1.0, 0.0], k=9).collect()
+    assert top[0]["vec_id"] == 0 and top[0]["cosine"] == pytest.approx(1.0)
+    assert top[-1]["vec_id"] == 8 and top[-1]["cosine"] is None
+
+    cents = ivf_train(df, n_centroids=3, iters=2, seed=42)
+    assigned = {
+        r["vec_id"]: r["ivf_cluster"] for r in ivf_assign(df, cents).collect()
+    }
+    assert assigned.pop(8) is None
+    assert all(c is not None for c in assigned.values())
+
+    for method in ("exact", "lsh"):
+        pairs = cosine_neardup_pairs(df, threshold=0.5, method=method).collect()
+        assert all(8 not in (r["id_a"], r["id_b"]) for r in pairs), method
+        assert all(r["cosine"] >= 0.5 for r in pairs), method
+
+
+def test_ann_index_zero_norm_centroid_ranks_last(spark, ansi, tmp_path):
+    """Every row seeds a centroid, so the zero-norm row becomes a centroid
+    no row is assigned to. A probe of one partition must still pick the
+    nearest centroid, never the zero-norm one."""
+    df = spark.createDataFrame(
+        _DIRS + [_ZERO], "vec_id long, embedding array<double>"
+    )
+    idx = str(tmp_path / f"ann_zero_{ansi}")
+    cents = build_ann_index(df, idx, n_centroids=9, iters=1, seed=42)
+    assert [0.0, 0.0] in [list(c) for c in cents]
+    for vec_id, vec in _DIRS:
+        top = ivf_topk_indexed(spark, idx, vec, k=1, nprobe=1).collect()
+        assert [r["vec_id"] for r in top] == [vec_id]
 
 
 def test_exact_neardup_guard_raises_on_large_input(spark):

@@ -186,101 +186,3 @@ def test_skew_report_single_corpus_shuffle(spark, transcripts, tmp_path):
     # one corpus-sized hash exchange (the groupBy); the window exchanges
     # move only the aggregated key table (SinglePartition)
     assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
-# ---------------------------------------------------------------- IVFADC
-
-
-def test_ivfadc_roundtrip_recall_and_plan(spark, emb, emb_pd, tmp_path):
-    """Build a persisted IVFADC index, probe it, and check (a) the ADC
-    shortlist recalls the exact-L2 top-10, (b) probes are deterministic,
-    (c) the probe plan partition-prunes the codes scan and never
-    shuffles (TakeOrderedAndProject top-k)."""
-    from feature_extraction_spark.ops.pq import (
-        build_ivfadc_index,
-        ivfadc_topk,
-    )
-
-    idx = str(tmp_path / "ivfadc")
-    coarse, cbs = build_ivfadc_index(
-        emb, idx, n_centroids=4, ivf_iters=1, m=8, k=16, pq_iters=1
-    )
-    assert len(coarse) == 4 and len(cbs) == 8 and len(cbs[0]) == 16
-    query = [float(x) for x in emb_pd.iloc[11]["embedding"]]
-
-    # full probe (nprobe = n_centroids): shortlist recall vs exact L2
-    top = ivfadc_topk(spark, idx, query, k=30, nprobe=4)
-    adc_ids = {r["vec_id"] for r in top.collect()}
-    exact = sorted(
-        (
-            sum(
-                (a - b) * (a - b)
-                for a, b in zip(list(row["embedding"]), query)
-            ),
-            row["vec_id"],
-        )
-        for _, row in emb_pd.iterrows()
-    )[:10]
-    exact_ids = {vid for _, vid in exact}
-    assert len(adc_ids & exact_ids) >= 7, (adc_ids, exact_ids)
-
-    # determinism across probes
-    a = [tuple(r) for r in ivfadc_topk(spark, idx, query, k=5).collect()]
-    b = [tuple(r) for r in ivfadc_topk(spark, idx, query, k=5).collect()]
-    assert a == b
-
-    # plan shape: partition pruning + no shuffle + heap top-k
-    pruned = ivfadc_topk(spark, idx, query, k=5, nprobe=2)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "ivf_cluster" in plan, plan
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "Exchange hashpartitioning" not in plan, plan
-    # pruned probe scans fewer rows than the corpus
-    n_pruned = (
-        spark.read.parquet(f"{idx}/codes")
-        .filter("ivf_cluster in (0,1,2,3)")
-        .count()
-    )
-    assert pruned.count() == 5 and n_pruned <= emb.count()
-
-
-def test_ivfadc_residual_beats_plain_pq(spark, emb, emb_pd, tmp_path):
-    """Residual PQ must quantize at least as well as plain PQ at the same
-    codebook budget: average reconstruction error of (coarse centroid +
-    decoded residual) <= plain PQ decode error. This is the reason IVFADC
-    encodes residuals at all (Jegou 2011 §IV)."""
-    from feature_extraction_spark.ops.pq import (
-        build_ivfadc_index,
-        pq_train,
-    )
-    from feature_extraction_spark.ops.similarity import ivf_assign
-
-    idx = str(tmp_path / "ivfadc2")
-    coarse, cbs = build_ivfadc_index(
-        emb, idx, n_centroids=4, ivf_iters=1, m=8, k=16, pq_iters=1
-    )
-    plain = pq_train(emb, m=8, k=16, iters=1)
-    assign = {
-        r["vec_id"]: r["ivf_cluster"]
-        for r in ivf_assign(emb, coarse).select(
-            "vec_id", "ivf_cluster"
-        ).collect()
-    }
-
-    def decode(codebooks, vec):
-        out = []
-        for j, c in enumerate(_py_encode(vec, codebooks)):
-            out.extend(codebooks[j][c])
-        return out
-
-    err_res, err_plain = 0.0, 0.0
-    for _, row in emb_pd.iterrows():
-        v = [float(x) for x in row["embedding"]]
-        cl = assign[row["vec_id"]]
-        cv = coarse[cl]
-        resid = [a - b for a, b in zip(v, cv)]
-        rec_res = [a + b for a, b in zip(cv, decode(cbs, resid))]
-        rec_plain = decode(plain, v)
-        err_res += sum((a - b) ** 2 for a, b in zip(v, rec_res))
-        err_plain += sum((a - b) ** 2 for a, b in zip(v, rec_plain))
-    assert err_res <= err_plain * 1.05, (err_res, err_plain)

@@ -16,7 +16,7 @@ from feature_extraction_spark.streaming.dedup import (
 )
 from feature_extraction_spark.synth import synth_documents
 
-CFG = dict(num_hashes=128, bands=32, method="oph")
+CFG = dict(num_hashes=128, bands=32)
 
 
 def _pairs_set(df):

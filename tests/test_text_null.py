@@ -2,13 +2,16 @@
 turns through verbosity_stats, lexdiv_stats, nonverbal_stats, liwc_features
 and the rolling word count, with ANSI off and on. NULL text tokenizes like
 '' (one empty token), so a conversation of NULL turns gets the same
-features as one of empty turns, whatever the session's ANSI mode."""
+features as one of empty turns, whatever the session's ANSI mode.
+The shared n-gram builder is checked here too, down to zero words."""
 
 import datetime as dt
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
+from feature_extraction_spark.functions.text import ngrams_expr
 from feature_extraction_spark.oracle import kernels as ok
 from feature_extraction_spark.ops.lexdiv import lexdiv_stats
 from feature_extraction_spark.ops.liwc import liwc_features, parse_dic
@@ -114,3 +117,19 @@ def test_rolling_wc_hostile_text(hostile):
         for i in range(len(texts)):
             exp = float(np.mean(wc[max(0, i - k + 1) : i + 1]))
             assert np.isclose(got[(conv, i)], exp), (conv, i, got[(conv, i)], exp)
+
+
+@pytest.mark.parametrize("n", [1, 2, 3])
+def test_ngrams_expr_matches_python(spark, n):
+    """Word counts 0 through n+2 (fewer words than n gives no gram), with
+    repeated words, in order; NULL stays NULL."""
+    rows = [(k, [f"w{i % 3}" for i in range(k)]) for k in range(n + 3)]
+    df = spark.createDataFrame(rows + [(-1, None)], "k int, words array<string>")
+    got = {
+        r["k"]: r["g"]
+        for r in df.select("k", ngrams_expr(F.col("words"), n).alias("g")).collect()
+    }
+    assert got.pop(-1) is None
+    for k, ws in rows:
+        exp = [" ".join(ws[i : i + n]) for i in range(len(ws) - n + 1)]
+        assert got[k] == exp, (k, got[k], exp)
