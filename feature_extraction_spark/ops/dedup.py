@@ -138,12 +138,17 @@ def minhash_signatures(
     cost is one string hash + k long hashes instead of k string hashes.
 
     One-permutation hashing (Li, Owen & Zhang, NIPS 2012: one hash per
-    shingle, min per bin) saves work only when a document has many more
-    shingles than there are bins. The repo's documents average 54 words
-    against 128 bins. On them, LSH dedup of the sf0.1 documents (5,000
-    docs, local[4] on a 4-vCPU host) took 3.7-5.1 s warm with this k-hash
-    form against 6.7-7.2 s with one-permutation signatures, for the same
-    pairs. No input here has long documents, so there is one scheme."""
+    shingle, min per bin, then densification) hashes each shingle once,
+    but its per-bin aggregation, densification window and pivot cost more
+    than the k long hashes on both document-length distributions here.
+    LSH dedup (threshold 0.8, 128/32, local[4] on a 4-vCPU host, warm
+    runs, identical pairs) took, k-hash against one-permutation:
+    - sf0.1 documents (5,000 docs, 54 words mean, 100 max, none over
+      128 shingles): 3.7-5.1 s against 6.7-7.2 s;
+    - ``synth.synth_documents`` at the dedup scaling job's 100,000 docs
+      (113 words mean, 1,005 max, 21% over 128 shingles): 28.0-31.1 s
+      against 39.5-53.5 s.
+    Corpora of much longer documents were not measured."""
     base = ensure_parallelism(df.select(F.col(id_col).alias("id"), F.col(text_col)))
     tok = base.select(
         "id", F.explode(_shingles(text_col, shingle_n)).alias("sh")
@@ -304,6 +309,9 @@ def minhash_lsh_dedup_incremental(
 
     ``state`` is a prior ``minhash_band_state`` output (same config —
     signatures are pure functions of it, so states compose across runs).
+    Nothing in the frame records that config: a state built under the
+    earlier 64-hash/16-band defaults must be probed with those arguments,
+    and one built from one-permutation signatures must be rebuilt.
     Returns ``(pairs, new_state)``:
 
     - ``pairs``: exact-Jaccard-verified near-dup pairs touching at least

@@ -86,9 +86,10 @@ def liwc_features(
     # beyond the final aggregation. The gram construction is a
     # higher-order-function chain (interpreted, outside codegen); the
     # explicit repartition gives both consumers the same exchange, so the
-    # chain is evaluated once per shuffle instead of once per branch. All gram orders flow into BOTH
-    # matchers: a wildcard stem is a *character* prefix, so 'go*' legally
-    # matches the bigram 'go home' (reference regex semantics).
+    # chain is evaluated once per shuffle instead of once per branch. All
+    # gram orders flow into BOTH matchers: a wildcard stem is a *character*
+    # prefix, so 'go*' legally matches the bigram 'go home' (reference
+    # regex semantics).
     toks = transcripts.select(
         *keys,
         F.explode(

@@ -28,6 +28,7 @@ tests/test_streaming_dedup.py).
 
 from __future__ import annotations
 
+import inspect
 import posixpath
 
 from pyspark.sql import DataFrame
@@ -56,11 +57,23 @@ def make_dedup_upserter(
     ``lsh_kwargs`` (num_hashes/bands/shingle_n/seed; 128 hashes in 32
     bands by default) must stay constant for the lifetime of a state
     directory — signatures are pure functions of them, and states under
-    different configs do not compose.
+    different configs do not compose. Every bands snapshot records the
+    resolved config in its manifest (``lsh``); a batch whose config differs
+    from the committed one raises instead of silently missing new-old
+    pairs. A bands state without that record (written before it existed,
+    when the defaults were 64 hashes in 16 bands and one-permutation
+    signatures could be chosen) is refused and must be rebuilt.
     """
     bands_t = posixpath.join(state_dir, "bands")
     docs_t = posixpath.join(state_dir, "docs")
     pairs_t = posixpath.join(state_dir, "pairs")
+    lsh = {
+        k: lsh_kwargs.get(k, p.default)
+        for k, p in inspect.signature(
+            minhash_lsh_dedup_incremental
+        ).parameters.items()
+        if k in ("num_hashes", "bands", "shingle_n", "seed")
+    }
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -70,6 +83,14 @@ def make_dedup_upserter(
             done = m.get("stream_batch_id")
             if done is not None and int(batch_id) <= int(done):
                 return  # replay of a fully-committed batch
+        last_bands = last_committed_version(spark, bands_t)
+        if last_bands is not None:
+            committed = read_manifest(spark, bands_t, last_bands).get("lsh")
+            if committed != lsh:
+                raise ValueError(
+                    f"band state {bands_t} was built with LSH config "
+                    f"{committed}, this stream uses {lsh}; rebuild the state"
+                )
         batch = (
             batch_df.select(
                 F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
@@ -120,7 +141,10 @@ def make_dedup_upserter(
         meta = {"stream_batch_id": int(batch_id)}
         if stream_key is not None:
             meta["stream_key"] = stream_key
-        commit_snapshot(new_bands, bands_t, mode="overwrite", extra_meta=meta)
+        commit_snapshot(
+            new_bands, bands_t, mode="overwrite",
+            extra_meta={**meta, "lsh": lsh},
+        )
         commit_snapshot(
             old_docs.unionByName(batch), docs_t, mode="overwrite",
             extra_meta=meta,

@@ -12,8 +12,8 @@ from feature_extraction_spark.ops.dedup import (
 )
 from feature_extraction_spark.synth import synth_documents
 
-# full-recall config at threshold 0.8: P(miss) ~ (1 - 0.8^4)^32 = 4e-8
-CFG = dict(num_hashes=128, bands=32)
+# the 128/32 defaults give full recall at threshold 0.8:
+# P(miss) ~ (1 - 0.8^4)^32 = 4e-8
 
 
 @pytest.fixture(scope="module")
@@ -34,12 +34,12 @@ def _state(df):
 def test_incremental_equals_full(docs):
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
-    full = _pairs(minhash_lsh_dedup(docs, threshold=0.8, **CFG))
+    full = _pairs(minhash_lsh_dedup(docs, threshold=0.8))
     assert full, "fixture must plant near-dup pairs"
-    old_pairs = _pairs(minhash_lsh_dedup(old, threshold=0.8, **CFG))
-    state = minhash_band_state(old, **CFG)
+    old_pairs = _pairs(minhash_lsh_dedup(old, threshold=0.8))
+    state = minhash_band_state(old)
     inc, new_state = minhash_lsh_dedup_incremental(
-        state, old, new, threshold=0.8, **CFG
+        state, old, new, threshold=0.8
     )
     inc_pairs = _pairs(inc)
     assert old_pairs | inc_pairs == full
@@ -48,33 +48,33 @@ def test_incremental_equals_full(docs):
     assert all(a in new_ids or b in new_ids for a, b, _ in inc_pairs)
     assert inc_pairs.isdisjoint(old_pairs)
     # the returned state is exactly the full corpus's band state
-    assert _state(new_state) == _state(minhash_band_state(docs, **CFG))
+    assert _state(new_state) == _state(minhash_band_state(docs))
 
 
 def test_two_increments_compose(docs):
     p0 = docs.filter(F.col("doc_id") % 3 == 0)
     p1 = docs.filter(F.col("doc_id") % 3 == 1)
     p2 = docs.filter(F.col("doc_id") % 3 == 2)
-    acc = _pairs(minhash_lsh_dedup(p0, threshold=0.8, **CFG))
-    state = minhash_band_state(p0, **CFG)
+    acc = _pairs(minhash_lsh_dedup(p0, threshold=0.8))
+    state = minhash_band_state(p0)
     inc1, state = minhash_lsh_dedup_incremental(
-        state, p0, p1, threshold=0.8, **CFG
+        state, p0, p1, threshold=0.8
     )
     acc |= _pairs(inc1)
     inc2, state = minhash_lsh_dedup_incremental(
-        state, p0.unionByName(p1), p2, threshold=0.8, **CFG
+        state, p0.unionByName(p1), p2, threshold=0.8
     )
     acc |= _pairs(inc2)
-    assert acc == _pairs(minhash_lsh_dedup(docs, threshold=0.8, **CFG))
-    assert _state(state) == _state(minhash_band_state(docs, **CFG))
+    assert acc == _pairs(minhash_lsh_dedup(docs, threshold=0.8))
+    assert _state(state) == _state(minhash_band_state(docs))
 
 
 def test_empty_increment_is_noop(docs, spark):
     old = docs.filter(F.col("doc_id") % 2 == 0)
     empty = docs.filter(F.lit(False))
-    state = minhash_band_state(old, **CFG)
+    state = minhash_band_state(old)
     inc, new_state = minhash_lsh_dedup_incremental(
-        state, old, empty, threshold=0.8, **CFG
+        state, old, empty, threshold=0.8
     )
     assert inc.count() == 0
     assert _state(new_state) == _state(state)

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from feature_extraction_spark.ops.dedup import minhash_lsh_dedup
 from feature_extraction_spark.sources.snapshots import (
+    commit_snapshot,
     last_committed_version,
     read_snapshot,
 )
@@ -15,8 +16,6 @@ from feature_extraction_spark.streaming.dedup import (
     stream_dedup_pairs,
 )
 from feature_extraction_spark.synth import synth_documents
-
-CFG = dict(num_hashes=128, bands=32)
 
 
 def _pairs_set(df):
@@ -39,21 +38,21 @@ def docs(spark):
 
 def test_direct_upserts_match_batch_prefixes(spark, docs, tmp_path):
     state = str(tmp_path / "state")
-    up = make_dedup_upserter(state, threshold=0.8, **CFG)
+    up = make_dedup_upserter(state, threshold=0.8)
     b0 = docs.filter(F.col("doc_id") % 3 == 0)
     b1 = docs.filter(F.col("doc_id") % 3 == 1)
     b2 = docs.filter(F.col("doc_id") % 3 == 2)
 
     up(b0, 0)
     assert _state_pairs(spark, state) == _pairs_set(
-        minhash_lsh_dedup(b0, threshold=0.8, **CFG)
+        minhash_lsh_dedup(b0, threshold=0.8)
     )
     up(b1, 1)
     assert _state_pairs(spark, state) == _pairs_set(
-        minhash_lsh_dedup(b0.unionByName(b1), threshold=0.8, **CFG)
+        minhash_lsh_dedup(b0.unionByName(b1), threshold=0.8)
     )
     up(b2, 2)
-    full = _pairs_set(minhash_lsh_dedup(docs, threshold=0.8, **CFG))
+    full = _pairs_set(minhash_lsh_dedup(docs, threshold=0.8))
     assert _state_pairs(spark, state) == full
 
     # replay of an already-committed batch is a no-op
@@ -67,7 +66,7 @@ def test_replay_after_partial_commit_is_idempotent(spark, docs, tmp_path):
     2, same rows) — the anti-join guards must keep bands/docs/pairs
     identical to the single-fold result."""
     state = str(tmp_path / "state")
-    up = make_dedup_upserter(state, threshold=0.8, **CFG)
+    up = make_dedup_upserter(state, threshold=0.8)
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
     b1 = docs.filter(F.col("doc_id") % 2 == 1)
     up(b0, 0)
@@ -105,19 +104,17 @@ def test_real_stream_availablenow(spark, docs, tmp_path):
 
     def catchup():
         stream = spark.readStream.schema(docs.schema).parquet(src)
-        q = stream_dedup_pairs(
-            stream, state, ckpt, threshold=0.8, **CFG
-        )
+        q = stream_dedup_pairs(stream, state, ckpt, threshold=0.8)
         q.awaitTermination(300)
 
     catchup()
     assert _state_pairs(spark, state) == _pairs_set(
-        minhash_lsh_dedup(first, threshold=0.8, **CFG)
+        minhash_lsh_dedup(first, threshold=0.8)
     )
     second.write.mode("append").parquet(src)
     catchup()
     assert _state_pairs(spark, state) == _pairs_set(
-        minhash_lsh_dedup(docs, threshold=0.8, **CFG)
+        minhash_lsh_dedup(docs, threshold=0.8)
     )
 
 
@@ -129,7 +126,7 @@ def test_string_id_corpus_keeps_declared_pair_schema(spark, docs, tmp_path):
         "doc_id", F.concat(F.lit("doc-"), F.col("doc_id"))
     ).cache()
     state = str(tmp_path / "state_str")
-    up = make_dedup_upserter(state, threshold=0.8, **CFG)
+    up = make_dedup_upserter(state, threshold=0.8)
     # batch 0 chosen to produce ZERO pairs (single doc) — the empty-pairs
     # frame is exactly what used to pin the wrong bigint schema
     up(sdocs.limit(1), 0)
@@ -141,5 +138,25 @@ def test_string_id_corpus_keeps_declared_pair_schema(spark, docs, tmp_path):
     v1 = last_committed_version(spark, t)
     got = read_snapshot(spark, t, v1)
     assert dict(got.dtypes)["id_a"] == "string"
-    exp = minhash_lsh_dedup(sdocs, threshold=0.8, **CFG)
+    exp = minhash_lsh_dedup(sdocs, threshold=0.8)
     assert _pairs_set(got) == _pairs_set(exp)
+
+
+def test_band_state_under_another_lsh_config_is_refused(spark, docs, tmp_path):
+    """A bands snapshot records the LSH config it was built with; folding a
+    batch under another config, or into a state without that record, raises
+    instead of probing bands that cannot collide with the batch's."""
+    b0 = docs.filter(F.col("doc_id") % 2 == 0)
+    b1 = docs.filter(F.col("doc_id") % 2 == 1)
+    state = str(tmp_path / "state")
+    make_dedup_upserter(state, num_hashes=64, bands=16)(b0, 0)
+    with pytest.raises(ValueError, match="rebuild the state"):
+        make_dedup_upserter(state)(b1, 1)
+
+    bare = str(tmp_path / "bare")
+    commit_snapshot(
+        spark.createDataFrame([(0, 0, 0)], "id long, band int, bucket long"),
+        f"{bare}/bands",
+    )
+    with pytest.raises(ValueError, match="rebuild the state"):
+        make_dedup_upserter(bare)(b1, 0)
