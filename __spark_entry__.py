@@ -206,7 +206,7 @@ def q_minhash_incremental_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stream_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous streaming dedup, driven through its foreachBatch upserter
-    directly (the exactly-once commit path; the availableNow stream wrapper
+    directly (the exactly-once commit path; an availableNow stream over it
     is pytest-covered): the corpus arrives as two micro-batches, each
     probing and extending the snapshot-committed band index. The final
     pairs snapshot equals the batch full-corpus pair set (invariant), so

@@ -244,14 +244,18 @@ def ivf_train(
     seed: int = 42,
 ) -> list[list[float]]:
     """Deterministic IVF coarse quantizer: seed centroids are the vectors of
-    the ``n_centroids`` rows with smallest xxhash64(id, seed) (a seeded
-    uniform sample), refined with ``iters`` Lloyd iterations (assign =
-    max-cosine; update = per-cluster mean, one scan + one hash agg each).
-    Centroids are collected to the driver (n_centroids x dim floats — tiny)
-    and broadcast back inside expressions."""
+    the ``n_centroids`` non-zero-norm rows with smallest xxhash64(id, seed)
+    (a seeded uniform sample), refined with ``iters`` Lloyd iterations
+    (assign = max-cosine; update = per-cluster mean, one scan + one hash
+    agg each). A zero-norm or NULL vector has no cosine to any row, so as a
+    seed it would be a centroid no row is ever assigned to; such rows are
+    never drawn (fewer non-zero rows than ``n_centroids`` give fewer
+    centroids). Centroids are collected to the driver (n_centroids x dim
+    floats — tiny) and broadcast back inside expressions."""
     vec = F.col(vec_col).cast("array<double>")
     seed_rows = (
         df.select(vec.alias("v"), F.xxhash64(F.col(id_col), F.lit(seed)).alias("h"))
+        .where(_norm(F.col("v")) > 0)
         .orderBy("h")
         .limit(n_centroids)
         .collect()
@@ -338,8 +342,8 @@ def ivf_topk_indexed(
     top-k is TakeOrderedAndProject). This is the serving path that makes
     IVF pay at scale: cost = nprobe/n_centroids of one table scan.
 
-    A zero-norm centroid (``ivf_train`` keeps a seed no row is assigned
-    to, e.g. a zero-norm seed row) ranks last: a NaN sort key would leave
+    A zero-norm centroid (``ivf_train`` never seeds one, but a committed
+    centroid table may hold one) ranks last: a NaN sort key would leave
     ``sorted`` unordered around it."""
     import math
 

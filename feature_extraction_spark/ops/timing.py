@@ -15,8 +15,9 @@ Reference semantics:
 
 Spark-first: silence extraction is array algebra over the typed
 ``word_timing`` column (transform-with-index lag-gap — no explode until the
-aggregation, no Python); then three grain-specific hash aggregations
-(turn / word / silence) joined on the entity keys.
+aggregation, no Python); then one explode into a stream of values tagged
+with their grain (segment / words-per-second / word / silence) and one
+conditional hash aggregation over the entity keys (``timing_stats``).
 """
 
 from __future__ import annotations

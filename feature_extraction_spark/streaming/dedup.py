@@ -17,8 +17,10 @@ pruned), and commits the three tables in a fixed order with the pairs
 table carrying the batch-id watermark LAST — so a crash anywhere in the
 window replays the batch, the anti-join guards make the bands/docs
 commits content-idempotent, and a batch whose pairs are already committed
-is skipped entirely (same exactly-once recipe as
-streaming/feature_store.py, tested by direct replay).
+is skipped entirely. The pairs table's watermark goes through the feature
+store's ``replay_guard`` (streaming/feature_store.py), so a batch from
+another stream, e.g. one restarted with a fresh checkpoint, raises instead
+of being skipped; tested by direct replay.
 
 The invariant inherited from the batch op: after any prefix of batches,
 ``pairs`` equals the full-corpus ``minhash_lsh_dedup`` pair set over the
@@ -42,6 +44,8 @@ from feature_extraction_spark.sources.snapshots import (
     read_manifest,
     read_snapshot,
 )
+from feature_extraction_spark.streaming.feature_store import replay_guard
+
 
 def make_dedup_upserter(
     state_dir: str,
@@ -63,6 +67,10 @@ def make_dedup_upserter(
     pairs. A bands state without that record (written before it existed,
     when the defaults were 64 hashes in 16 bands and one-permutation
     signatures could be chosen) is refused and must be rebuilt.
+
+    ``stream_key`` identifies the stream instance (use the checkpoint
+    location); a batch from another stream than the one that last
+    committed ``pairs`` raises (see ``replay_guard``).
     """
     bands_t = posixpath.join(state_dir, "bands")
     docs_t = posixpath.join(state_dir, "docs")
@@ -77,12 +85,12 @@ def make_dedup_upserter(
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        last_pairs = last_committed_version(spark, pairs_t)
-        if last_pairs is not None:
-            m = read_manifest(spark, pairs_t, last_pairs)
-            done = m.get("stream_batch_id")
-            if done is not None and int(batch_id) <= int(done):
-                return  # replay of a fully-committed batch
+        # no handover: a fresh checkpoint re-reads the corpus from the start
+        last_pairs, skip = replay_guard(
+            spark, pairs_t, batch_id, stream_key, False
+        )
+        if skip:
+            return  # replay of a fully-committed batch
         last_bands = last_committed_version(spark, bands_t)
         if last_bands is not None:
             committed = read_manifest(spark, bands_t, last_bands).get("lsh")
@@ -157,21 +165,3 @@ def make_dedup_upserter(
             expire_snapshots(spark, t, keep_last=keep_snapshots)
 
     return upsert
-
-
-def stream_dedup_pairs(
-    stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-    **upserter_kwargs,
-):
-    """Attach the dedup upserter to a streaming documents source. Returns
-    the StreamingQuery; the accumulated pair set is the latest snapshot of
-    ``{state_dir}/pairs`` (read via sources/snapshots.read_snapshot)."""
-    writer = stream.writeStream.foreachBatch(
-        make_dedup_upserter(state_dir, **upserter_kwargs)
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,9 +1,9 @@
 """Streaming feature-store maintenance: fold each micro-batch into a
 snapshot-committed mergeable-state table.
 
-This closes the loop between the streaming layer and the incremental
-aggregation algebra (ops/incremental.py): a Structured Streaming source
-feeds ``foreachBatch``; every micro-batch is reduced to per-entity partial
+This closes the loop between Structured Streaming and the incremental
+aggregation algebra (ops/incremental.py): a streaming source feeds
+``foreachBatch``; every micro-batch is reduced to per-entity partial
 stat states (one hash aggregation over |batch| rows) and merged with the
 current state snapshot (|entities| rows), and the result is committed as
 the next snapshot of the state table. Per update the engine touches
@@ -12,9 +12,10 @@ the next snapshot of the state table. Per update the engine touches
 Exactly-once without a transactional sink: Structured Streaming replays a
 failed micro-batch under the SAME batch_id, and the state commit is atomic
 (sources/snapshots.py marker protocol) and records the batch_id it folded
-in. A replayed batch whose id is already committed is skipped, so the
-crash window between snapshot-commit and stream-checkpoint-advance cannot
-double-count (tested by direct replay in tests/test_feature_store.py).
+in. ``replay_guard`` skips a replayed batch whose id is already committed,
+so the crash window between snapshot-commit and stream-checkpoint-advance
+cannot double-count (tested by direct replay in tests/test_feature_store.py).
+streaming/dedup.py guards its pair table with the same function.
 
 Reference analog: none — the reference re-runs batch scripts per data drop
 (extract_timing_features.py:187-218); this is the always-on form.
@@ -39,98 +40,87 @@ from feature_extraction_spark.sources.snapshots import (
 )
 
 
+def replay_guard(
+    spark,
+    table: str,
+    batch_id: int,
+    stream_key: str | None,
+    allow_stream_handover: bool,
+) -> tuple[int | None, bool]:
+    """Decide whether micro-batch ``batch_id`` of stream ``stream_key``
+    folds into ``table``, the snapshot table whose manifests carry the
+    stream's batch-id watermark (``stream_batch_id``, ``stream_key``).
+
+    Returns ``(last, skip)``: ``last`` is the table's last committed
+    version (None before the first commit), ``skip`` is True when the
+    batch id is already committed by the same stream (a replay).
+
+    Batch ids are only monotonic within one checkpoint: a query restarted
+    with a FRESH checkpoint restarts at batch 0, so a bare numeric guard
+    would silently skip every new batch up to the old high-water mark —
+    permanent data loss. So a watermark recorded under another stream key
+    raises (the fresh query also re-reads the source from its configured
+    start, so folding it into existing state would double-count history),
+    unless ``allow_stream_handover`` declares a deliberate handover to a
+    query that reads strictly new data; the batch then folds regardless of
+    the old watermark."""
+    last = last_committed_version(spark, table)
+    if last is None:
+        return None, False
+    m = read_manifest(spark, table, last)
+    recorded_key = m.get("stream_key")
+    if stream_key is not None and recorded_key not in (None, stream_key):
+        if allow_stream_handover:
+            return last, False
+        raise RuntimeError(
+            f"state table {table!r} was last written by stream "
+            f"{recorded_key!r}, not {stream_key!r} — its batch-id watermark "
+            "is meaningless for this query and folding a restarted-from-"
+            "scratch stream would double-count history. Reuse the original "
+            "checkpoint or target a fresh state table."
+        )
+    done = m.get("stream_batch_id")
+    return last, done is not None and int(batch_id) <= int(done)
+
+
 def make_state_upserter(
     state_table: str,
-    value_col: str | None = None,
+    value_col: str,
     level: str = "conv",
     stream_key: str | None = None,
     allow_stream_handover: bool = False,
     keep_snapshots: int = 2,
-    partial_fn: Callable[[DataFrame], DataFrame] | None = None,
-    merge_fn: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """The foreachBatch callable: fold one micro-batch into the state
-    snapshot table, idempotently under batch replay.
-
-    The folded summary defaults to the (n, sum, sumsq, min, max) stat
-    state over ``value_col``, but ANY mergeable summary works — pass
-    ``partial_fn`` (micro-batch -> state rows) and ``merge_fn``
-    (previous state x delta state -> merged state), e.g. the fixed-edge
-    histogram quantile state (ops/sketches.histogram_state /
-    merge_histogram_states, see ``stream_update_histogram_states``) or
-    HLL sketch tables. The commit/replay/retention machinery is summary-
-    agnostic.
+    """The foreachBatch callable: fold one micro-batch's (n, sum, sumsq,
+    min, max) stat state over ``value_col`` into the state snapshot table,
+    idempotently under batch replay. Wire it as
+    ``stream.writeStream.option("checkpointLocation", ckpt)
+    .foreachBatch(make_state_upserter(table, col, stream_key=ckpt))``.
 
     ``stream_key`` identifies the stream INSTANCE (use the checkpoint
-    location — ``stream_update_stat_states`` passes it automatically).
-    Batch ids are only monotonic within one checkpoint: a query restarted
-    with a FRESH checkpoint restarts at batch 0, so a bare numeric guard
-    would silently skip every new batch up to the old high-water mark —
-    permanent data loss. With the key recorded, a mismatched stream
-    raises instead (the fresh query also re-reads the source from its
-    configured start, so folding it into existing state would
-    double-count history); pass ``allow_stream_handover=True`` only for a
-    deliberate handover where the new query reads strictly new data.
+    location); every commit records it, and ``replay_guard`` refuses a
+    batch from another stream unless ``allow_stream_handover=True``.
 
     ``keep_snapshots``: every commit is a full state copy, so an
     always-on stream grows storage as batches x |state| without
     retention; superseded snapshots beyond this many are expired after
     each commit (>= 2 keeps one rollback target; raise it for time
     travel, never below 1)."""
-    if (partial_fn is None) != (merge_fn is None):
-        raise ValueError("pass partial_fn and merge_fn together")
-    if partial_fn is None and value_col is None:
-        raise ValueError("need value_col (stat state) or partial_fn/merge_fn")
-    if partial_fn is not None and value_col is not None:
-        # a caller who passes both almost certainly believes value_col
-        # steers the custom summary — it would be silently ignored
-        raise ValueError(
-            "value_col is only for the default stat state; a custom "
-            "partial_fn selects its own columns — pass one or the other"
-        )
-    if partial_fn is not None and level != "conv":
-        # same trap as value_col: level only parameterizes the DEFAULT
-        # stat state, a custom partial_fn picks its own grouping
-        raise ValueError(
-            "level applies only to the default stat state; a custom "
-            "partial_fn defines its own grain — drop the level argument"
-        )
-    if partial_fn is None:
-        partial_fn = lambda b: partial_stat_state(b, value_col, level=level)
-        merge_fn = merge_stat_states
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        last = last_committed_version(spark, state_table)
-        if last is not None:
-            m = read_manifest(spark, state_table, last)
-            done = m.get("stream_batch_id")
-            recorded_key = m.get("stream_key")
-            same_stream = (
-                stream_key is None
-                or recorded_key is None
-                or recorded_key == stream_key
-            )
-            if not same_stream:
-                if not allow_stream_handover:
-                    raise RuntimeError(
-                        f"state table {state_table!r} was last written by "
-                        f"stream {recorded_key!r}, not {stream_key!r} — its "
-                        "batch-id watermark is meaningless for this query "
-                        "and folding a restarted-from-scratch stream would "
-                        "double-count history. Reuse the original "
-                        "checkpoint, target a fresh state table, or pass "
-                        "allow_stream_handover=True for a deliberate "
-                        "handover."
-                    )
-                # deliberate handover: fold regardless of the old watermark
-            elif done is not None and int(batch_id) <= int(done):
-                return  # replay of an already-committed batch
-        delta = partial_fn(batch_df)
+        last, skip = replay_guard(
+            spark, state_table, batch_id, stream_key, allow_stream_handover
+        )
+        if skip:
+            return
+        delta = partial_stat_state(batch_df, value_col, level=level)
         if last is None:
             state = delta
         else:
-            state = merge_fn(read_snapshot(spark, state_table, last), delta)
+            state = merge_stat_states(
+                read_snapshot(spark, state_table, last), delta
+            )
         meta = {"stream_batch_id": int(batch_id)}
         if stream_key is not None:
             meta["stream_key"] = stream_key
@@ -138,144 +128,3 @@ def make_state_upserter(
         expire_snapshots(spark, state_table, keep_last=keep_snapshots)
 
     return upsert
-
-
-def stream_update_states(
-    stream: DataFrame,
-    state_table: str,
-    checkpoint: str,
-    partial_fn: Callable[[DataFrame], DataFrame],
-    merge_fn: Callable[[DataFrame, DataFrame], DataFrame],
-    query_name: str = "feature_store_update",
-    allow_stream_handover: bool = False,
-    keep_snapshots: int = 2,
-):
-    """Wire a streaming DataFrame into the state-table upserter for ANY
-    mergeable summary. Returns the (not-yet-started) DataStreamWriter so
-    the caller picks the trigger (availableNow for catch-up runs,
-    processingTime for always-on). The checkpoint location doubles as the
-    stream identity recorded in every state commit (see
-    make_state_upserter)."""
-    return (
-        stream.writeStream.queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .foreachBatch(
-            make_state_upserter(
-                state_table,
-                stream_key=checkpoint,
-                allow_stream_handover=allow_stream_handover,
-                keep_snapshots=keep_snapshots,
-                partial_fn=partial_fn,
-                merge_fn=merge_fn,
-            )
-        )
-    )
-
-
-def stream_update_stat_states(
-    stream: DataFrame,
-    state_table: str,
-    checkpoint: str,
-    value_col: str,
-    level: str = "conv",
-    query_name: str = "feature_store_update",
-    allow_stream_handover: bool = False,
-    keep_snapshots: int = 2,
-):
-    """The (n, sum, sumsq, min, max) stat-state form of
-    ``stream_update_states``."""
-    return stream_update_states(
-        stream,
-        state_table,
-        checkpoint,
-        partial_fn=lambda b: partial_stat_state(b, value_col, level=level),
-        merge_fn=merge_stat_states,
-        query_name=query_name,
-        allow_stream_handover=allow_stream_handover,
-        keep_snapshots=keep_snapshots,
-    )
-
-
-def stream_update_histogram_states(
-    stream: DataFrame,
-    state_table: str,
-    checkpoint: str,
-    value_col: str,
-    spec,
-    level: str = "conv",
-    query_name: str = "feature_store_histogram_update",
-    allow_stream_handover: bool = False,
-    keep_snapshots: int = 2,
-):
-    """Maintain per-entity HISTOGRAM QUANTILE state (ops/sketches.py
-    fixed-edge mergeable summaries) from a stream — always-on p50/p99
-    tracking without ever rescanning history. Finalize any snapshot with
-    ``histogram_quantiles(read_snapshot(...), spec)``. Same commit /
-    replay-idempotency / retention machinery as the stat-state form; the
-    ``spec`` (bin edges) must stay constant for the state table's lifetime
-    — changing it requires a rebuild (states under different edges do not
-    merge)."""
-    from feature_extraction_spark.ops.sketches import (
-        histogram_state,
-        merge_histogram_states,
-    )
-
-    return stream_update_states(
-        stream,
-        state_table,
-        checkpoint,
-        partial_fn=lambda b: histogram_state(b, value_col, spec, level=level),
-        merge_fn=merge_histogram_states,
-        query_name=query_name,
-        allow_stream_handover=allow_stream_handover,
-        keep_snapshots=keep_snapshots,
-    )
-
-
-def stream_update_distinct_states(
-    stream: DataFrame,
-    state_table: str,
-    checkpoint: str,
-    value_col: str,
-    level: str = "conv",
-    lg_k: int = 12,
-    query_name: str = "feature_store_distinct_update",
-    allow_stream_handover: bool = False,
-    keep_snapshots: int = 2,
-):
-    """Maintain per-entity DISTINCT-COUNT state as mergeable DataSketches
-    HLL sketches (the third summary type through the generic upserter):
-    each micro-batch sketches its own rows (one hash aggregation), the
-    merge is ``hll_union_agg`` over |entities| kilobyte sketches — the
-    stream's full history is never rescanned and never stored. Read any
-    snapshot with ``hll_sketch_estimate(sketch)`` (or
-    ops/sketches.merge_vocab_sketches for coarser grains)."""
-    from pyspark.sql import functions as F
-
-    from feature_extraction_spark.ops.levels import keys_for
-
-    keys = keys_for(level)
-
-    def partial(b: DataFrame) -> DataFrame:
-        return b.groupBy(*keys).agg(
-            F.hll_sketch_agg(value_col, F.lit(lg_k)).alias("sketch")
-        )
-
-    def merge(prev: DataFrame, delta: DataFrame) -> DataFrame:
-        return (
-            prev.unionByName(delta)
-            .groupBy(*keys)
-            .agg(F.hll_union_agg("sketch").alias("sketch"))
-        )
-
-    return stream_update_states(
-        stream,
-        state_table,
-        checkpoint,
-        partial_fn=partial,
-        merge_fn=merge,
-        query_name=query_name,
-        allow_stream_handover=allow_stream_handover,
-        keep_snapshots=keep_snapshots,
-    )

@@ -1,5 +1,5 @@
 """Engine runner (checkpoint/resume, lineage metrics), leakage validator,
-streaming session windows vs batch parity, multimodal plumbing."""
+salted repartition, multimodal plumbing."""
 
 import json
 import os
@@ -84,46 +84,6 @@ def test_salted_repartition(spark, transcripts):
     assert (big[sizes <= 50] == 1).all()
 
 
-def test_stream_session_bounds_matches_batch(spark, transcripts, tmp_path):
-    from feature_extraction_spark.ops.sessionize import session_bounds
-    from feature_extraction_spark.streaming.sessions import stream_session_bounds
-
-    src = str(tmp_path / "stream_src")
-    transcripts.write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(transcripts.schema).parquet(src)
-    out_path = str(tmp_path / "stream_out")
-    q = (
-        stream_session_bounds(stream, gap="300 seconds", watermark="0 seconds")
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", str(tmp_path / "stream_ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out_path).toPandas()
-    exp = session_bounds(transcripts, gap_seconds=300.0).toPandas()
-    # append mode only emits sessions the watermark has CLOSED: sessions
-    # whose end + gap reaches past the global max event time stay open at
-    # end-of-stream and are legitimately absent from the sink.
-    max_ts = transcripts.agg(F.max("ts")).collect()[0][0]
-    import pandas as pd
-
-    closed = exp[exp["session_end"] + pd.Timedelta(seconds=300) <= max_ts]
-    g = got.groupby("conv_id")["n_turns"].agg(["count", "sum"])
-    e = closed.groupby("conv_id")["n_turns"].agg(["count", "sum"])
-    merged = g.join(e, lsuffix="_s", rsuffix="_b", how="right")
-    assert (merged["count_s"] >= merged["count_b"]).all()
-    assert (merged["sum_s"] >= merged["sum_b"]).all()
-    # and the streaming output never invents sessions absent from batch
-    key_b = {(r.conv_id, r.session_start) for r in exp.itertuples()}
-    key_s = {(r.conv_id, r.session_start) for r in got.itertuples()}
-    assert key_s.issubset(key_b)
-
-
 def test_multimodal_stub_plumbing(spark):
     from feature_extraction_spark.ops.multimodal import (
         extract_image_features,
@@ -139,81 +99,6 @@ def test_multimodal_stub_plumbing(spark):
     again = extract_image_features(synth_media(spark, n=60), dim=8).toPandas()
     assert feats.sort_values("media_id")["feat"].map(tuple).tolist() == \
         again.sort_values("media_id")["feat"].map(tuple).tolist()
-
-
-def test_stream_turn_rates_matches_batch(spark, transcripts, tmp_path):
-    """Sliding-window rates: streaming complete-mode output == batch
-    window() aggregation, exactly."""
-    from feature_extraction_spark.streaming.sessions import stream_turn_rates
-
-    src = str(tmp_path / "rates_src")
-    transcripts.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(transcripts.schema).parquet(src)
-    q = (
-        stream_turn_rates(stream, window="10 minutes", slide="5 minutes")
-        .writeStream.format("memory")
-        .queryName("rates_mem")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = (
-        spark.table("rates_mem")
-        .toPandas()
-        .sort_values(["conv_id", "window_start"])
-        .reset_index(drop=True)
-    )
-    exp = (
-        transcripts.groupBy(
-            F.window("ts", "10 minutes", "5 minutes"), F.col("conv_id")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.avg(F.col("tool").isNotNull().cast("double")).alias("tool_rate"),
-        )
-        .select(
-            "conv_id",
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "n_turns",
-            "tool_rate",
-        )
-        .toPandas()
-        .sort_values(["conv_id", "window_start"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(exp)
-    assert (got["n_turns"].values == exp["n_turns"].values).all()
-    import numpy as np
-
-    assert np.allclose(got["tool_rate"], exp["tool_rate"])
-
-
-def test_stream_dedup_turns(spark, transcripts, tmp_path):
-    """dropDuplicatesWithinWatermark removes exact (conv_id, turn_idx)
-    duplicates injected into the stream."""
-    from feature_extraction_spark.streaming.sessions import stream_dedup_turns
-
-    dup = transcripts.unionByName(transcripts.limit(50))
-    src = str(tmp_path / "dedup_src")
-    dup.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(dup.schema).parquet(src)
-    out_path = str(tmp_path / "dedup_out")
-    q = (
-        stream_dedup_turns(stream)
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", str(tmp_path / "dedup_ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out_path)
-    n_unique = transcripts.select("conv_id", "turn_idx").distinct().count()
-    assert got.count() == n_unique
-    assert got.select("conv_id", "turn_idx").distinct().count() == n_unique
 
 
 def test_pipeline_checkpoint_uri_scheme(spark, transcripts, tmp_path):
@@ -240,142 +125,6 @@ def test_pipeline_checkpoint_uri_scheme(spark, transcripts, tmp_path):
     out2 = pipe.run(transcripts, checkpoint_dir=ckpt).count()
     m2 = {m.step: m for m in pipe.metrics}
     assert m2["sess"].resumed and calls["n"] == 1 and out1 == out2
-
-
-def test_stream_asof_enrich_matches_batch(spark, transcripts, tmp_path):
-    """Streaming point-in-time enrichment == the batch as-of join, row for
-    row (exact compare): each streamed turn picks up the latest static
-    dimension row at-or-before its ts."""
-    from feature_extraction_spark.ops.asof import asof_join
-    from feature_extraction_spark.streaming.enrich import stream_asof_enrich
-
-    # static dimension: one score per conv every ~7 turns
-    dim = (
-        transcripts.filter(F.col("turn_idx") % 7 == 0)
-        .select("conv_id", "ts", (F.col("turn_idx") * 1.5).alias("score"))
-    )
-
-    src = str(tmp_path / "asof_src")
-    transcripts.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(transcripts.schema).parquet(src)
-
-    out_path = str(tmp_path / "asof_out")
-    q = (
-        stream_asof_enrich(stream, dim, on="conv_id", value_cols=["score"])
-        .select("conv_id", "turn_idx", "score_asof", "ts_asof")
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", str(tmp_path / "asof_ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    key = ["conv_id", "turn_idx"]
-    got = spark.read.parquet(out_path).toPandas().sort_values(key).reset_index(drop=True)
-    exp = (
-        asof_join(transcripts, dim, on="conv_id", value_cols=["score"])
-        .select("conv_id", "turn_idx", "score_asof", "ts_asof")
-        .toPandas()
-        .sort_values(key)
-        .reset_index(drop=True)
-    )
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(got, exp)
-
-
-def test_stream_trailing_join_matches_batch(spark, transcripts, tmp_path):
-    """Watermarked stream-stream trailing join == the equivalent batch
-    join, pair for pair: every (turn, earlier-right-event-within-lookback)
-    match of the same conv."""
-    from feature_extraction_spark.streaming.enrich import stream_trailing_join
-
-    left_b = transcripts.select("conv_id", "turn_idx", "ts")
-    right_b = (
-        transcripts.filter(F.col("turn_idx") % 5 == 0)
-        .select("conv_id", F.col("turn_idx").alias("ridx"), "ts")
-    )
-    lsrc, rsrc = str(tmp_path / "tj_l"), str(tmp_path / "tj_r")
-    left_b.write.parquet(lsrc)
-    right_b.write.parquet(rsrc)
-
-    LOOK = 120.0
-    out = stream_trailing_join(
-        spark.readStream.schema(left_b.schema).parquet(lsrc),
-        spark.readStream.schema(right_b.schema).parquet(rsrc),
-        on="conv_id",
-        lookback_seconds=LOOK,
-    )
-    out_path = str(tmp_path / "tj_out")
-    q = (
-        out.select("conv_id", "turn_idx", "ridx_r")
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", str(tmp_path / "tj_ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = {
-        (r.conv_id, r.turn_idx, r.ridx_r)
-        for r in spark.read.parquet(out_path).collect()
-    }
-    exp_df = left_b.alias("l").join(
-        right_b.alias("r"),
-        (F.col("l.conv_id") == F.col("r.conv_id"))
-        & (F.col("r.ts") <= F.col("l.ts"))
-        & (F.col("r.ts") >= F.col("l.ts") - F.expr("INTERVAL 120 SECONDS")),
-        "inner",
-    ).select("l.conv_id", "l.turn_idx", F.col("r.ridx").alias("ridx_r"))
-    exp = {(r.conv_id, r.turn_idx, r.ridx_r) for r in exp_df.collect()}
-    assert got == exp and len(got) > 0
-
-    # leakage: no joined right event is later than its left event
-    chk = stream_trailing_join(
-        spark.readStream.schema(left_b.schema).parquet(lsrc),
-        spark.readStream.schema(right_b.schema).parquet(rsrc),
-        on="conv_id",
-        lookback_seconds=LOOK,
-        strict=True,
-    )
-    assert chk.isStreaming
-
-    # validation
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        stream_trailing_join(left_b, right_b, on="conv_id", lookback_seconds=LOOK)
-
-
-def test_stream_trailing_join_suffix_collision_raises(spark, transcripts, tmp_path):
-    """A left column named like the suffixed right ts used to make the
-    time condition ambiguous at analysis; now it fails fast at
-    construction with a clear message."""
-    from feature_extraction_spark.streaming.enrich import stream_trailing_join
-
-    left_b = transcripts.select(
-        "conv_id", "turn_idx", "ts", F.col("ts").alias("ts_r")
-    )
-    right_b = transcripts.select("conv_id", "ts")
-    lsrc, rsrc = str(tmp_path / "col_l"), str(tmp_path / "col_r")
-    left_b.write.parquet(lsrc)
-    right_b.write.parquet(rsrc)
-    ls = spark.readStream.schema(left_b.schema).parquet(lsrc)
-    rs = spark.readStream.schema(right_b.schema).parquet(rsrc)
-
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="collides"):
-        stream_trailing_join(ls, rs, on="conv_id", lookback_seconds=60.0)
-    # a non-colliding suffix works: plan constructs, qualified time refs
-    out = stream_trailing_join(
-        ls, rs, on="conv_id", lookback_seconds=60.0, suffix="_rhs"
-    )
-    assert out.isStreaming and "ts_rhs" in out.columns
 
 
 def test_bmp_codec_roundtrip_and_validation():

@@ -11,10 +11,7 @@ from feature_extraction_spark.sources.snapshots import (
     read_manifest,
     read_snapshot,
 )
-from feature_extraction_spark.streaming.feature_store import (
-    make_state_upserter,
-    stream_update_stat_states,
-)
+from feature_extraction_spark.streaming.feature_store import make_state_upserter
 
 
 def _expected(pdf, value_col="value"):
@@ -28,6 +25,17 @@ def _expected(pdf, value_col="value"):
 def _turns_with_value(transcripts):
     return transcripts.withColumn(
         "value", F.length(F.coalesce(F.col("text"), F.lit(""))).cast("double")
+    )
+
+
+def _catchup(stream, state, ckpt):
+    """One availableNow run of ``stream`` folded into ``state``; the
+    checkpoint location doubles as the stream identity."""
+    return (
+        stream.writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch(make_state_upserter(state, "value", stream_key=ckpt))
+        .trigger(availableNow=True)
+        .start()
     )
 
 
@@ -46,14 +54,7 @@ def test_stream_state_matches_batch_over_two_catchups(
 
     def run_catchup():
         stream = spark.readStream.schema(t.schema).parquet(src)
-        q = (
-            stream_update_stat_states(
-                stream, state, ckpt, value_col="value", level="conv"
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        _catchup(stream, state, ckpt).awaitTermination(120)
 
     run_catchup()
     v1 = last_committed_version(spark, state)
@@ -158,118 +159,6 @@ def test_retention_bounds_snapshot_storage(spark, transcripts, tmp_path):
     assert set(got["conv_id"]) == set(exp)
 
 
-def test_stream_histogram_state_matches_batch(spark, transcripts, tmp_path):
-    """Histogram-summary maintenance through the generalized upserter: two
-    catch-up runs, final state == one batch histogram over everything, and
-    finalized quantiles land within a bin width of exact."""
-    from feature_extraction_spark.ops.sketches import (
-        HistogramSpec,
-        histogram_quantiles,
-        histogram_state,
-    )
-    from feature_extraction_spark.streaming.feature_store import (
-        stream_update_histogram_states,
-    )
-
-    src = str(tmp_path / "hsrc")
-    state = str(tmp_path / "hstate")
-    ckpt = str(tmp_path / "hckpt")
-    spec = HistogramSpec(lo=0.0, hi=200.0, bins=100)
-    t = _turns_with_value(transcripts)
-    t.filter(F.col("turn_idx") % 2 == 0).write.mode("append").parquet(src)
-
-    def run_catchup():
-        stream = spark.readStream.schema(t.schema).parquet(src)
-        q = (
-            stream_update_histogram_states(
-                stream, state, ckpt, value_col="value", spec=spec, level="conv"
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_catchup()
-    t.filter(F.col("turn_idx") % 2 == 1).write.mode("append").parquet(src)
-    run_catchup()
-
-    got = read_snapshot(spark, state)
-    whole = histogram_state(t, "value", spec, level="conv")
-    assert sorted(map(tuple, got.select("conv_id", "bin", "n").collect())) == sorted(
-        map(tuple, whole.collect())
-    )
-    q50 = {
-        r.conv_id: r.q_0_5
-        for r in histogram_quantiles(got.select("conv_id", "bin", "n"), spec, [0.5]).collect()
-    }
-    pdf = t.toPandas()
-    width = (spec.hi - spec.lo) / spec.bins
-    for cid, grp in pdf.groupby("conv_id"):
-        # the histogram's guarantee is vs the RANK-BASED (inverted-CDF)
-        # quantile — the ceil(p*n)-th order statistic; type-7 interpolation
-        # can sit arbitrarily far across a value gap in tiny groups
-        exact = float(np.quantile(grp["value"].values, 0.5, method="inverted_cdf"))
-        exact = min(max(exact, spec.lo), spec.hi)  # domain-clamped target
-        assert abs(q50[cid] - exact) <= width + 1e-9, cid
-
-
-def test_upserter_validates_custom_fns(spark):
-    from feature_extraction_spark.streaming.feature_store import make_state_upserter
-
-    with pytest.raises(ValueError):
-        make_state_upserter("t", partial_fn=lambda b: b)  # merge_fn missing
-    with pytest.raises(ValueError):
-        make_state_upserter("t")  # neither value_col nor fns
-    with pytest.raises(ValueError):
-        make_state_upserter(  # value_col would be silently ignored
-            "t", value_col="v", partial_fn=lambda b: b, merge_fn=lambda a, b: a
-        )
-    with pytest.raises(ValueError, match="level"):
-        make_state_upserter(  # level would be silently ignored too
-            "t", level="day", partial_fn=lambda b: b, merge_fn=lambda a, b: a
-        )
-
-
-def test_stream_distinct_state_matches_batch(spark, transcripts, tmp_path):
-    """HLL sketch maintenance through the generic upserter: two catch-up
-    runs, snapshot estimate == one whole-data sketch estimate exactly
-    (the union of shard sketches IS the whole-data sketch)."""
-    from feature_extraction_spark.streaming.feature_store import (
-        stream_update_distinct_states,
-    )
-
-    src = str(tmp_path / "dsrc")
-    state = str(tmp_path / "dstate")
-    ckpt = str(tmp_path / "dckpt")
-    t = transcripts.select("conv_id", "turn_idx", "ts", "text")
-    t.filter(F.col("turn_idx") % 2 == 0).write.mode("append").parquet(src)
-
-    def run_catchup():
-        q = (
-            stream_update_distinct_states(
-                spark.readStream.schema(t.schema).parquet(src),
-                state, ckpt, value_col="text", level="conv",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_catchup()
-    t.filter(F.col("turn_idx") % 2 == 1).write.mode("append").parquet(src)
-    run_catchup()
-
-    got = read_snapshot(spark, state).select(
-        "conv_id", F.expr("hll_sketch_estimate(sketch)").alias("est")
-    )
-    whole = t.groupBy("conv_id").agg(
-        F.expr("hll_sketch_estimate(hll_sketch_agg(text, 12))").alias("est")
-    )
-    g = {r.conv_id: r.est for r in got.collect()}
-    w = {r.conv_id: r.est for r in whole.collect()}
-    assert g == w and len(g) > 0
-
-
 def test_crash_between_microbatches_restart_equals_uninterrupted(
     spark, transcripts, tmp_path
 ):
@@ -327,14 +216,7 @@ def test_crash_between_microbatches_restart_equals_uninterrupted(
     # uninterrupted reference run over the same source
     state_ref = str(tmp_path / "ref_state")
     ckpt_ref = str(tmp_path / "ref_ckpt")
-    q3 = (
-        stream_update_stat_states(
-            reader(), state_ref, ckpt_ref, value_col="value", level="conv"
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q3.awaitTermination(120)
+    _catchup(reader(), state_ref, ckpt_ref).awaitTermination(120)
 
     got = (
         finalize_stat_state(read_snapshot(spark, state), "v")

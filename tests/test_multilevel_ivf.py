@@ -68,6 +68,30 @@ def test_multi_level_agg_single_shuffle(spark, transcripts):
     assert above_expand.count("Exchange") == 1, plan
 
 
+def test_attach_subject_inner_broadcast(spark):
+    """attach_subject is an inner equi-join (a conversation without a
+    subject row is dropped) executed as a broadcast hash join, even with
+    size-based broadcasting switched off."""
+    from feature_extraction_spark.ops.levels import attach_subject
+
+    turns = spark.createDataFrame(
+        [("c1", 0), ("c1", 1), ("c2", 0), ("c3", 0)], "conv_id string, turn_idx int"
+    )
+    dim = spark.createDataFrame(
+        [("c1", "s1"), ("c2", "s2"), ("c9", "s9")], "conv_id string, subject_id string"
+    )
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = attach_subject(turns, dim)
+        got = sorted(map(tuple, out.select("conv_id", "turn_idx", "subject_id").collect()))
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    assert got == [("c1", 0, "s1"), ("c1", 1, "s1"), ("c2", 0, "s2")]
+    assert "BroadcastHashJoin" in plan and "Inner" in plan, plan
+
+
 @pytest.fixture(scope="module")
 def embeddings(spark):
     rng = np.random.default_rng(7)
@@ -242,15 +266,26 @@ def test_zero_norm_embedding_gives_null_cosine(spark, ansi):
 
 
 def test_ann_index_zero_norm_centroid_ranks_last(spark, ansi, tmp_path):
-    """Every row seeds a centroid, so the zero-norm row becomes a centroid
-    no row is assigned to. A probe of one partition must still pick the
-    nearest centroid, never the zero-norm one."""
+    """ivf_train never seeds a centroid from the zero-norm row: nine
+    centroids asked over eight directions give eight. A committed centroid
+    table that does hold a zero-norm centroid (no partition behind it) must
+    still probe the nearest centroid, never the zero-norm one."""
+    from feature_extraction_spark.sources.snapshots import commit_snapshot
+
     df = spark.createDataFrame(
         _DIRS + [_ZERO], "vec_id long, embedding array<double>"
     )
     idx = str(tmp_path / f"ann_zero_{ansi}")
     cents = build_ann_index(df, idx, n_centroids=9, iters=1, seed=42)
-    assert [0.0, 0.0] in [list(c) for c in cents]
+    assert len(cents) == 8 and [0.0, 0.0] not in [list(c) for c in cents]
+    commit_snapshot(
+        spark.createDataFrame(
+            [(8, [0.0, 0.0])] + [(c, list(v)) for c, v in enumerate(cents)],
+            "ivf_cluster int, centroid array<double>",
+        ),
+        f"{idx}/centroids",
+        mode="overwrite",
+    )
     for vec_id, vec in _DIRS:
         top = ivf_topk_indexed(spark, idx, vec, k=1, nprobe=1).collect()
         assert [r["vec_id"] for r in top] == [vec_id]

@@ -11,10 +11,7 @@ from feature_extraction_spark.sources.snapshots import (
     last_committed_version,
     read_snapshot,
 )
-from feature_extraction_spark.streaming.dedup import (
-    make_dedup_upserter,
-    stream_dedup_pairs,
-)
+from feature_extraction_spark.streaming.dedup import make_dedup_upserter
 from feature_extraction_spark.synth import synth_documents
 
 
@@ -104,7 +101,13 @@ def test_real_stream_availablenow(spark, docs, tmp_path):
 
     def catchup():
         stream = spark.readStream.schema(docs.schema).parquet(src)
-        q = stream_dedup_pairs(stream, state, ckpt, threshold=0.8)
+        up = make_dedup_upserter(state, threshold=0.8, stream_key=ckpt)
+        q = (
+            stream.writeStream.option("checkpointLocation", ckpt)
+            .foreachBatch(up)
+            .trigger(availableNow=True)
+            .start()
+        )
         q.awaitTermination(300)
 
     catchup()
@@ -116,6 +119,25 @@ def test_real_stream_availablenow(spark, docs, tmp_path):
     assert _state_pairs(spark, state) == _pairs_set(
         minhash_lsh_dedup(docs, threshold=0.8)
     )
+
+
+def test_batch_from_another_stream_raises(spark, docs, tmp_path):
+    """A stream restarted with a fresh checkpoint restarts its batch ids at
+    0. Its batches must be refused, not skipped as replays of the old
+    stream's ids (that would silently drop them) and not folded (the fresh
+    query re-reads the corpus from the start)."""
+    state = str(tmp_path / "state")
+    up_a = make_dedup_upserter(state, threshold=0.8, stream_key="A")
+    up_a(docs.filter(F.col("doc_id") % 2 == 0), 0)
+    up_a(docs.filter(F.col("doc_id") % 2 == 1), 1)
+    t = f"{state}/pairs"
+    v = last_committed_version(spark, t)
+    before = _state_pairs(spark, state)
+    up_b = make_dedup_upserter(state, threshold=0.8, stream_key="B")
+    with pytest.raises(RuntimeError, match="'A'"):
+        up_b(docs.filter(F.col("doc_id") % 2 == 0), 0)
+    assert last_committed_version(spark, t) == v
+    assert _state_pairs(spark, state) == before
 
 
 def test_string_id_corpus_keeps_declared_pair_schema(spark, docs, tmp_path):
