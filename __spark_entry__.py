@@ -883,7 +883,8 @@ def q_ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # iterations, centroids rounded to 4 decimals) and FROZEN as a literal —
 # the trainer is iterative (same driver contract as the BPE trainer /
 # LDA), while encode + ADC serving are pure expressions and fully
-# SQL-oracled from these exact constants.
+# SQL-oracled from these exact constants. tests/test_trainer_provenance.py
+# re-trains it and checks it equals this literal.
 _PQ_CODEBOOK: list[list[list[float]]] = [
     [[-0.0309, 0.0144, -0.0639, 0.0177, -0.1858, -0.01, -0.1008, -0.0205],
      [-0.0591, -0.0263, -0.0873, -0.0592, 0.0752, 0.1133, 0.0125, 0.0164],
@@ -2006,7 +2007,8 @@ _QM_JUNK = " !!! $$$ zz zz zz WIN WIN !!!" * 6
 # scoring query with a value-level DuckDB oracle — the realistic serving
 # shape (classifier trained once, scores everywhere), the same contract
 # as _BPE_MERGES and _PQ_CODEBOOK. Reproducible: the L-BFGS fit on fixed
-# data/params is deterministic (re-fit equality checked when frozen).
+# data/params is deterministic, and tests/test_trainer_provenance.py
+# re-fits it and checks these literals exactly.
 _QM_COEF: list[float] = [
     0.013321037762608144,   # q_n_chars
     -0.016098193111056185,  # q_n_words
@@ -2167,67 +2169,22 @@ def q_hist_quantile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # REGISTRY ORDER IS THE DRIVER'S COVERAGE WINDOW: the driver writes
-    # correctness rows for only the first 50 entries. Round-4 rotation
-    # (VERDICT r3 "Next round" #1): the 25 queries with no CORRECTNESS_r03
-    # row lead — first the 14 never driver-checked anywhere, then the 11
-    # green in r02 but rotated out of r03 — followed by round-4 additions,
-    # then the 50 already green in r03 (which therefore have a green row in
-    # r03 even when they fall outside r04's window).
-    _q = {
-        # -- 14 never driver-checked (r02/r03 missed them; sim-green only)
-        "target_encode_events": q_target_encode_events,
-        "quantile_bin_events": q_quantile_bin_events,
-        "feature_cross_events": q_feature_cross_events,
-        "weighted_sample_docs": q_weighted_sample_docs,
-        "temporal_split_events": q_temporal_split_events,
-        "truecase_docs": q_truecase_docs,
-        "pii_scrub_docs": q_pii_scrub_docs,
-        "decontaminate_docs": q_decontaminate_docs,
-        "lda_topics_docs": q_lda_topics_docs,
-        "semdedup_emb": q_semdedup_emb,
-        "stratified_sample_docs": q_stratified_sample_docs,
-        "quality_model_docs": q_quality_model_docs,
-        "interval_join_events": q_interval_join_events,
-        "hist_quantile_events": q_hist_quantile_events,
-        # -- green in r02, rotated out of r03's 50-row window
-        "tpch_q3": q_tpch_q3,
-        "cosine_topk": q_cosine_topk,
-        "knn_join": q_knn_join,
-        "neardup_pairs_emb": q_neardup_pairs_emb,
-        "neardup_pairs_emb_lsh": q_neardup_pairs_emb_lsh,
-        "dedup_clusters_docs": q_dedup_clusters_docs,
-        "chunk_docs": q_chunk_docs,
-        "hash_split_docs": q_hash_split_docs,
-        "mixture_docs": q_mixture_docs,
-        "vocab_filter_docs": q_vocab_filter_docs,
-        # -- round-4 additions (need their first driver row)
-        "bpe_apply_docs": q_bpe_apply_docs,
-        "wav_stats_media": q_wav_stats_media,
-        "ivf_topk_indexed": q_ivf_topk_indexed,
-        "pq_codes_emb": q_pq_codes_emb,
-        "pq_adc_topk_emb": q_pq_adc_topk_emb,
-        "skew_report_events": q_skew_report_events,
-        "dsir_weights_docs": q_dsir_weights_docs,
-        "dsir_sample_docs": q_dsir_sample_docs,
-        "sq8_topk_emb": q_sq8_topk_emb,
-        "hamming_topk_emb": q_hamming_topk_emb,
-        "profile_events": q_profile_events,
-        "mixture_temp_docs": q_mixture_temp_docs,
-        "contamination_frac_docs": q_contamination_frac_docs,
-        # -- round-4 session-2 additions (need their first driver row)
-        "line_dedup_docs": q_line_dedup_docs,
-        "c4_filter_docs": q_c4_filter_docs,
-        "ppl_buckets_docs": q_ppl_buckets_docs,
-        "render_turns_events": q_render_turns_events,
-        "render_conv_events": q_render_conv_events,
-        "truncate_conv_events": q_truncate_conv_events,
+    # correctness rows for only the first 50 entries, and a row covers only
+    # the code it ran. So the window leads with the four queries whose
+    # values changed after their last row: liwc_docs (its NULL-text entity
+    # is one empty token now, so its proportions are 0.0, not NaN) and
+    # jsonl_parse_events, shuffle_order_docs and hard_negatives_emb
+    # (changed in r5, last row from r04). Then comes the r05 window less
+    # tpch_q1 and bmp_stats_media, which read no text or timestamp and keep
+    # their green r05 rows. Every query past position 50 has a green row in
+    # r04 or r05. The NULL-convention variants (timing_stats_events' NULL
+    # word_timing, liwc_docs, lm_ppl_docs' NULL/empty/whitespace docs) sit
+    # inside the window.
+    return {
+        "liwc_docs": q_liwc_docs,
         "jsonl_parse_events": q_jsonl_parse_events,
-        "hard_negatives_emb": q_hard_negatives_emb,
         "shuffle_order_docs": q_shuffle_order_docs,
-        # -- green in CORRECTNESS_r03 (window overflow is covered there)
-        "verbosity_docs": q_verbosity_docs,
-        "lexdiv_docs": q_lexdiv_docs,
-        "nonverbal_docs": q_nonverbal_docs,
+        "hard_negatives_emb": q_hard_negatives_emb,
         "token_counts_docs": q_token_counts_docs,
         "langid_docs": q_langid_docs,
         "fingerprint_docs": q_fingerprint_docs,
@@ -2254,7 +2211,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "backfill_purchase": q_backfill_purchase,
         "role_transitions_events": q_role_transitions_events,
         "pos_docs": q_pos_docs,
-        "liwc_docs": q_liwc_docs,
         "quality_docs": q_quality_docs,
         "gopher_docs": q_gopher_docs,
         "bm25_topk_docs": q_bm25_topk_docs,
@@ -2267,52 +2223,62 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "daily_stats_events": q_daily_stats_events,
         "asof_purchase_tolerance": q_asof_purchase_tolerance,
         "graph_docs": q_graph_docs,
-        "graph_planted_docs": q_graph_planted_docs,
-        "phrase_merge_docs": q_phrase_merge_docs,
         "multilevel_events": q_multilevel_events,
         "multimodal_features": q_multimodal_features,
-        "bmp_stats_media": q_bmp_stats_media,
         "hypothesis_mean_docs": q_hypothesis_mean_docs,
         "timing_stats_events": q_timing_stats_events,
         "conf_stats_events": q_conf_stats_events,
+        "quality_model_docs": q_quality_model_docs,
+        "graph_planted_docs": q_graph_planted_docs,
+        "phrase_merge_docs": q_phrase_merge_docs,
+        "target_encode_events": q_target_encode_events,
+        "quantile_bin_events": q_quantile_bin_events,
+        "feature_cross_events": q_feature_cross_events,
+        "weighted_sample_docs": q_weighted_sample_docs,
+        "temporal_split_events": q_temporal_split_events,
+        "truecase_docs": q_truecase_docs,
+        "pii_scrub_docs": q_pii_scrub_docs,
+        "decontaminate_docs": q_decontaminate_docs,
+        "lda_topics_docs": q_lda_topics_docs,
+        "semdedup_emb": q_semdedup_emb,
+        "stratified_sample_docs": q_stratified_sample_docs,
+        "interval_join_events": q_interval_join_events,
+        "hist_quantile_events": q_hist_quantile_events,
+        "tpch_q3": q_tpch_q3,
+        "cosine_topk": q_cosine_topk,
+        "knn_join": q_knn_join,
+        "neardup_pairs_emb": q_neardup_pairs_emb,
+        "neardup_pairs_emb_lsh": q_neardup_pairs_emb_lsh,
+        "dedup_clusters_docs": q_dedup_clusters_docs,
+        "chunk_docs": q_chunk_docs,
+        "hash_split_docs": q_hash_split_docs,
+        "mixture_docs": q_mixture_docs,
+        "vocab_filter_docs": q_vocab_filter_docs,
+        "bpe_apply_docs": q_bpe_apply_docs,
+        "wav_stats_media": q_wav_stats_media,
+        "ivf_topk_indexed": q_ivf_topk_indexed,
+        "pq_codes_emb": q_pq_codes_emb,
+        "pq_adc_topk_emb": q_pq_adc_topk_emb,
+        "skew_report_events": q_skew_report_events,
+        "dsir_weights_docs": q_dsir_weights_docs,
+        "dsir_sample_docs": q_dsir_sample_docs,
+        "sq8_topk_emb": q_sq8_topk_emb,
+        "hamming_topk_emb": q_hamming_topk_emb,
+        "profile_events": q_profile_events,
+        "mixture_temp_docs": q_mixture_temp_docs,
+        "contamination_frac_docs": q_contamination_frac_docs,
+        "line_dedup_docs": q_line_dedup_docs,
+        "c4_filter_docs": q_c4_filter_docs,
+        "ppl_buckets_docs": q_ppl_buckets_docs,
+        "render_turns_events": q_render_turns_events,
+        "render_conv_events": q_render_conv_events,
+        "truncate_conv_events": q_truncate_conv_events,
+        "verbosity_docs": q_verbosity_docs,
+        "lexdiv_docs": q_lexdiv_docs,
+        "nonverbal_docs": q_nonverbal_docs,
+        "bmp_stats_media": q_bmp_stats_media,
         "tpch_q1": q_tpch_q1,
     }
-    ordered = {k: _q[k] for k in _R05_WINDOW}
-    ordered.update({k: f for k, f in _q.items() if k not in ordered})
-    assert len(ordered) == len(_q), "window names must exist in the registry"
-    return ordered
-
-
-# COVERAGE WINDOW: the driver writes correctness rows for only the first
-# 50 registry entries, and a row covers only the code it ran. So the
-# window leads with the four queries whose values changed after their last
-# row: liwc_docs (its NULL-text entity is one empty token now, so its
-# proportions are 0.0, not NaN) and jsonl_parse_events, shuffle_order_docs
-# and hard_negatives_emb (changed in r5, last row from r04). Then comes the
-# r05 window less tpch_q1 and bmp_stats_media, which read no text
-# or timestamp and keep their green r05 rows. Every query past position 50
-# has a green row in r04 or r05. The NULL-convention variants
-# (timing_stats_events' NULL word_timing, liwc_docs, lm_ppl_docs' NULL/
-# empty/whitespace docs) sit inside the window.
-_R05_WINDOW = [
-    "liwc_docs", "jsonl_parse_events", "shuffle_order_docs",
-    "hard_negatives_emb",
-    "token_counts_docs", "langid_docs", "fingerprint_docs",
-    "exact_dedup_docs", "jaccard_pairs_docs", "minhash_pairs_docs",
-    "simhash_pairs_docs", "minhash_incremental_docs", "stream_dedup_docs",
-    "entropy_events", "mixture_rates_docs", "bpe_tokens_docs", "pmi_docs",
-    "asof_purchase", "asof_purchase_broadcast", "asof_purchase_forward",
-    "asof_purchase_nearest", "decontaminate_bloom_docs", "emb_pool_label",
-    "sessionize_events", "session_stats_events", "latency_stats_events",
-    "rolling_events_1h", "backfill_purchase", "role_transitions_events",
-    "pos_docs", "quality_docs", "gopher_docs",
-    "bm25_topk_docs", "lm_ppl_docs", "rolling_median_events",
-    "dup_spans_docs", "despan_docs", "heavy_hitters_docs",
-    "zscore_events", "daily_stats_events", "asof_purchase_tolerance",
-    "graph_docs", "multilevel_events", "multimodal_features",
-    "hypothesis_mean_docs", "timing_stats_events", "conf_stats_events",
-    "quality_model_docs", "graph_planted_docs", "phrase_merge_docs",
-]
 
 
 # ---------------------------------------------------------------- oracles

@@ -130,24 +130,6 @@ def split_column(
     return (F.lit(last) if expr is None else expr.otherwise(last)).alias("split")
 
 
-def hash_sample(
-    df: DataFrame,
-    fraction: float,
-    key_cols: str | list[str],
-    salt: str = "",
-) -> DataFrame:
-    """Deterministic ``fraction`` sample by entity hash: a pure function of
-    (key, salt) — reproducible across runs, engines, and cluster sizes,
-    and NESTED (a 0.2 sample is a subset of a 0.5 sample at the same salt),
-    unlike ``DataFrame.sample``, whose output depends on partitioning.
-    Sampling by entity key keeps groups intact (all-or-nothing)."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError("fraction must be in [0, 1]")
-    return df.where(
-        _entity_hash(key_cols, salt) < F.lit(_hex_threshold(fraction))
-    )
-
-
 def mixture_sample(
     df: DataFrame,
     group_col: str,
@@ -159,7 +141,7 @@ def mixture_sample(
     source/domain label) at its own sampling rate — e.g. up-weight curated
     sources by down-sampling the crawl. Groups absent from ``rates`` are
     DROPPED (explicit mixture spec). Same deterministic md5-threshold
-    mechanism as ``hash_sample`` over ``key_cols`` (the sampling unit —
+    mechanism as ``hash_split`` over ``key_cols`` (the sampling unit —
     doc id for per-document rates, conv id for group-intact rates; the
     GROUP label itself would be all-or-nothing and is deliberately not a
     default); one scan, no shuffle, and the predicate reaches the parquet
@@ -209,7 +191,7 @@ def stratified_sample_exact(
     independent of partitioning or cluster size, and the sample is NESTED
     in a larger-n draw at the same salt (reservoirs are neither).
 
-    Use over ``hash_sample`` when strata are heavily skewed and a FRACTION
+    Use over ``mixture_sample`` when strata are heavily skewed and a FRACTION
     would starve small strata (quality tiers, rare languages) — quota
     sampling equalizes representation.
 
@@ -217,8 +199,8 @@ def stratified_sample_exact(
     row_number window. A hot stratum serializes its own window (windows
     cannot be salted without breaking the exact-k contract); at 100 TB
     prefer strata with bounded cardinality ratios, or pre-filter with
-    ``hash_sample`` at a safe over-sampling factor and quota-cut the
-    small survivor set.
+    ``mixture_sample`` at a safe over-sampling rate per stratum and
+    quota-cut the small survivor set.
 
     Determinism contract: the draw is ranked by (salted entity hash,
     key_cols), which is a total order iff ``key_cols`` uniquely identify
@@ -231,7 +213,7 @@ def stratified_sample_exact(
     ``None`` because a whole-row tiebreaker references every column and
     defeats parquet column pruning — at 100 TB the sampler should read
     only (strata + keys + output columns), not the text payload. Note the
-    unique-keys contract is the same one ``hash_split``/``hash_sample``
+    unique-keys contract is the same one ``hash_split``/``mixture_sample``
     already rely on (an entity hash presumes the keys NAME an entity);
     callers sampling at a coarser grain than their rows must opt in to a
     tiebreak or accept arrival-order picks among within-entity rows.

@@ -243,26 +243,3 @@ def neardup_clusters(
             id_col, F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id")
         )
     )
-
-
-def dedup_by_clusters(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
-    """Keep one canonical document per near-dup cluster: the minimum id
-    AMONG MEMBERS PRESENT IN ``df`` — not the raw cluster label, which can
-    name an id that only exists in ``pairs`` (stale pairs computed over a
-    superset corpus would then drop every surviving member of the cluster).
-    Non-canonical members are removed with a left-anti join on ``id_col``
-    (the drop list is |non-canonical| rows — tiny next to the corpus)."""
-    cl = neardup_clusters(df.select(id_col), pairs, id_col, src, dst)
-    keep = cl.groupBy("cluster_id").agg(F.min(id_col).alias("_keep"))
-    drop = (
-        cl.join(keep, "cluster_id")
-        .where(F.col(id_col) != F.col("_keep"))
-        .select(id_col)
-    )
-    return df.join(drop, id_col, "left_anti")

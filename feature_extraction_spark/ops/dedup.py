@@ -175,11 +175,11 @@ def minhash_band_state(
     function of (text, num_hashes, bands, shingle_n, seed), so a
     state written yesterday composes with bands computed today.
 
-    At scale, write it bucketed by (band, bucket)
-    (sources/io.write_bucketed): every future increment probes it with an
-    equi-join that needs NO exchange on the state side — the 100 TB corpus
-    is never re-shingled, never re-hashed, never re-shuffled; only the
-    day's increment is. See ``minhash_lsh_dedup_incremental``."""
+    At scale, write it bucketed by (band, bucket) (``bucketBy`` on the
+    writer): every future increment probes it with an equi-join that needs
+    NO exchange on the state side — the 100 TB corpus is never
+    re-shingled, never re-hashed, never re-shuffled; only the day's
+    increment is. See ``minhash_lsh_dedup_incremental``."""
     assert num_hashes % bands == 0
     rows = num_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n, seed)

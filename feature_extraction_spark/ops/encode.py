@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from feature_extraction_spark.ops.chunk import _entity_hash
@@ -105,24 +105,6 @@ def apply_target_encoder(
     return joined.withColumn(
         out_col, F.coalesce(F.col("te_value"), F.col("_te_fallback"))
     ).drop("te_value", "_te_fallback")
-
-
-def target_encode(
-    df: DataFrame,
-    cat_cols: str | Sequence[str],
-    target_col: str,
-    train: DataFrame | None = None,
-    smoothing: float = 20.0,
-    out_col: str = "te",
-) -> DataFrame:
-    """Fit on ``train`` (defaults to ``df`` — the no-split case) and
-    transform ``df``. Pass the training slice explicitly whenever one
-    exists; fitting on the frame being scored leaks eval targets into the
-    encoding (the exact failure mode target encoding is notorious for)."""
-    enc = fit_target_encoder(
-        train if train is not None else df, cat_cols, target_col, smoothing
-    )
-    return apply_target_encoder(df, enc, cat_cols, out_col=out_col)
 
 
 def fit_quantile_bins(

@@ -123,8 +123,6 @@ def prepare_sft_stages(
     benchmark_df: DataFrame | None = None,
     split_fractions: dict[str, float] | None = None,
     split_salt: str = "",
-    materialize_rendered: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> "OrderedDict[str, DataFrame]":
     """SFT (supervised fine-tuning) dataset assembly from a TURN-grain
     transcript table, composed from the same independently-oracled
@@ -138,13 +136,9 @@ def prepare_sft_stages(
     conversation never straddles train/val/test).
 
     The final stage is conv-grain (conv_col, text, split); every stage is
-    lazy and the whole chain is one Catalyst plan. One caveat to "one
-    lazy plan": the dedup stages consume the rendered conv-grain frame
-    on multiple join sides, so fully-lazy execution re-runs the
-    truncate+render chain per consumer — pass
-    ``materialize_rendered=True`` (optionally with ``checkpoint_dir``
-    for a snapshot-committed cut on reliable storage) to pin the
-    conv-grain frame once; the 100 TB deployment shape.
+    lazy and the whole chain is one Catalyst plan. The dedup stages
+    consume the rendered conv-grain frame on multiple join sides, so
+    execution re-runs the truncate+render chain per consumer.
     """
     from feature_extraction_spark.ops.chunk import hash_split
     from feature_extraction_spark.ops.dedup import decontaminate, exact_dedup
@@ -177,17 +171,6 @@ def prepare_sft_stages(
     )
     stages["render"] = cur
     cur = cur.filter(F.col("n_trainable_chars") > 0).select(conv_col, "text")
-    if materialize_rendered:
-        # the conv-grain rendered frame has MULTIPLE downstream consumers
-        # (both sides of the exact-dedup self-semi-join, the line_dedup
-        # occurrence/doc branches): left lazy, each re-runs the whole
-        # truncate+render window chain over the TURN table (plan-audited:
-        # 6 turn-table scans at bench scale). Materializing the much
-        # smaller conv-grain frame once caps that at one pass — the same
-        # k-consumer contract as the PMI pair table (ops/lm.py).
-        from feature_extraction_spark.sources.snapshots import materialize
-
-        cur = materialize(cur, checkpoint_dir, name="sft_rendered")
     stages["trainable_only"] = cur
     cur = exact_dedup(cur, id_col=conv_col, text_col="text")
     stages["exact_dedup"] = cur

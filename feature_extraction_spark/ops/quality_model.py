@@ -11,9 +11,9 @@ broadcast of the coefficient vector + row-local math — no shuffle at all;
 at 100 TB the filter is a map-only pass whose predicate can feed a
 parquet/partition pruning write.
 
-Labels: any boolean/0-1 column. ``weak_labels_from_gopher`` derives the
-standard weak supervision (Gopher keep-decision as the positive class) so
-a curated positive set is optional.
+Labels: any boolean/0-1 column. The registry's frozen model was trained
+on a planted corpus (``__spark_entry__._qm_planted``);
+tests/test_trainer_provenance.py re-fits it and checks the literals.
 
 Oracle contract (r5): the SCORING path is value-oracled in the driver —
 `quality_model_docs` freezes trained coefficients as literals (same
@@ -83,24 +83,6 @@ def _feature_vector(df: DataFrame, text_col: str) -> DataFrame:
     return df.withColumn("_qfeat", array_to_vector(arr))
 
 
-def weak_labels_from_gopher(
-    df: DataFrame,
-    text_col: str = "text",
-    id_cols: tuple[str, ...] = ("doc_id",),
-    thresholds: dict[str, float] | None = None,
-    label_col: str = "label",
-) -> DataFrame:
-    """Gopher keep-decision as a weak label: 1.0 = passes every rule."""
-    from feature_extraction_spark.ops.gopher import with_gopher_quality
-
-    g = with_gopher_quality(
-        df, text_col=text_col, id_cols=id_cols, thresholds=thresholds
-    )
-    return g.withColumn(
-        label_col, F.when(F.col("gopher_keep"), 1.0).otherwise(0.0)
-    )
-
-
 def train_quality_classifier(
     df: DataFrame,
     label_col: str = "label",
@@ -157,7 +139,7 @@ def quality_filter(
     """Keep documents the classifier scores at or above ``min_prob``.
     GPT-3 instead keeps a stochastic Pareto-lottery of low scorers to
     avoid hard distribution cuts; compose ``score_quality`` with
-    ``hash_sample`` on the low-score slice for that behavior."""
+    ``mixture_sample`` on the low-score slice for that behavior."""
     return score_quality(model, df, text_col).filter(
         F.col("q_model_prob") >= min_prob
     )

@@ -1,11 +1,10 @@
-"""TF-IDF weighting and BM25 ranked retrieval over a document corpus.
+"""BM25 ranked retrieval over a document corpus.
 
 Reference analog: none (the reference has no retrieval ops) — this is part
 of the training-pipeline extension layer, using the standard Lucene/
 Robertson formulations:
 
 - idf(t)   = ln(1 + (N - df + 0.5) / (df + 0.5))            (BM25 idf)
-- tfidf    = tf * (ln((1 + N) / (1 + df)) + 1)              (smooth idf)
 - bm25(d)  = sum_t idf(t) * tf * (k1+1) / (tf + k1 * (1 - b + b*dl/avgdl))
 
 Scale design (100 TB corpus, short query):
@@ -16,10 +15,6 @@ Scale design (100 TB corpus, short query):
   per-doc sum all run over that filtered stream with map-side partial
   aggregation. Corpus stats (N, avgdl) are a 1-row aggregate broadcast via
   crossJoin; the idf table is |query terms| rows, broadcast.
-- ``tfidf_matrix`` is the heavy materialization path: one explode + one
-  (doc, term) aggregation; the vocabulary df table derives from the same
-  aggregate and joins back on term (8-byte-hashable key). Both sides of
-  that join demand the same exchange, which Spark reuses.
 """
 
 from __future__ import annotations
@@ -40,34 +35,6 @@ def _tokenize_query(query: str) -> list[str]:
         if w:
             seen.setdefault(w, None)
     return list(seen)
-
-
-def term_counts(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, term, tf, dl): per-document term frequencies + document length
-    in words. One explode, one hash aggregation."""
-    words = ws_tokens_expr(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
-    return (
-        df.select(F.col(id_col), words.alias("_w"))
-        .withColumn("dl", F.size("_w"))
-        .select(id_col, "dl", F.explode("_w").alias("term"))
-        .groupBy(id_col, "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-
-
-def tfidf_matrix(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Sparse TF-IDF matrix (id, term, tf, df, tfidf) with smooth idf."""
-    tc = term_counts(df, text_col=text_col, id_col=id_col)
-    n_docs = df.count()  # scalar; one lightweight count job
-    dfreq = tc.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log((F.lit(1.0) + n_docs) / (F.lit(1.0) + F.col("df"))) + F.lit(1.0)
-    return tc.join(dfreq, "term").select(
-        id_col, "term", "tf", "df", (F.col("tf") * idf).alias("tfidf")
-    )
 
 
 def bm25_topk(

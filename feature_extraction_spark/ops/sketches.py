@@ -1,31 +1,26 @@
-"""Approximate / sketch aggregations — the 100 TB grain of the stat packs.
+"""Sketch aggregations — the corpus grain of the stat packs.
 
-The exact A2 bundles (ops/turn_stats.py, ops/timing.py) use `median`, which
-Spark computes exactly (full per-group sort of the values). At 10^12 turns
-an exact per-entity median is affordable only because groups are small; the
-CORPUS-level percentiles, distinct counts, and vocabulary sizes that a
-training-data pipeline tracks per shard are not. These operators are the
-documented scale substitutes:
+The exact A2 bundles get their medians exactly: ops/timing.py with Spark's
+`median` (a full per-group sort of the values), ops/turn_stats.py from an
+exact per-grain value histogram. Per-entity groups are small, so that is
+affordable at 10^12 turns; corpus-level frequency and quantile tracking,
+and quantiles that must merge across shards, are not. Two mergeable
+summaries cover those:
 
-- ``approx_stat_bundle``: one-pass bundle with `percentile_approx`
-  (mergeable quantile sketch, bounded memory per group) replacing the exact
-  median — same column names as the exact bundle so packs can swap it in.
-- ``approx_distinct``: HyperLogLog++ `approx_count_distinct` with a
-  configurable relative standard deviation.
-- ``vocab_sketches`` / ``merge_vocab_sketches``: persistable, MERGEABLE
-  Apache DataSketches HLL sketches (`hll_sketch_agg` / `hll_union_agg`) of
-  per-entity vocabularies. This is the real 100 TB pattern: sketch each
-  partition/day shard once at write time, then answer "distinct tokens over
-  any entity/date range" by unioning kilobyte sketches instead of
-  re-scanning terabytes of text.
+- ``heavy_hitters`` / ``heavy_hitter_terms``: Misra-Gries top-k frequent
+  items, one bounded counter table per partition merged by one hash
+  aggregation.
+- ``HistogramSpec`` / ``histogram_state`` / ``merge_histogram_states`` /
+  ``histogram_quantiles``: a fixed-edge per-entity histogram state that is
+  computed per shard, merged across shards, and finalized to any quantile
+  within one bin width.
 
 Accuracy contracts are tested against the exact answers in
-tests/test_sketches.py (HLL++ rsd bound, quantile-rank tolerance,
-sketch-merge == whole-corpus estimate).
+tests/test_sketches.py and tests/test_rangejoin_histogram.py.
 
 Reference parity note: the reference computes exact pandas medians on
 per-file shards (timing_features/extract_word_phone_timing.py:22-30) and
-has no corpus-level distinct tracking; these operators are the
+has no corpus-level frequency tracking; these operators are the
 training-pipeline extension of that stat-bundle shape.
 """
 
@@ -39,116 +34,6 @@ from pyspark.sql import types as T
 
 from feature_extraction_spark.functions.text import ws_tokens_expr
 from feature_extraction_spark.ops.levels import keys_for
-
-
-def approx_stat_bundle(
-    col: str | Column, prefix: str, accuracy: int = 10_000
-) -> list[Column]:
-    """max/min/mean/med/std aggregate list with the sketch median.
-
-    `percentile_approx` keeps a bounded summary (~`accuracy` centroids) per
-    group and is map-side mergeable; rank error <= 1/accuracy. Column names
-    match ops/timing._bundle so the exact and approx bundles are
-    interchangeable in a pack's agg list."""
-    c = F.col(col) if isinstance(col, str) else col
-    return [
-        F.max(c).cast("double").alias(f"{prefix}_max"),
-        F.min(c).cast("double").alias(f"{prefix}_min"),
-        F.mean(c).alias(f"{prefix}_mean"),
-        F.percentile_approx(c, 0.5, accuracy).cast("double").alias(f"{prefix}_med"),
-        F.stddev_pop(c).alias(f"{prefix}_std"),
-    ]
-
-
-def approx_quantiles(
-    df: DataFrame,
-    value_col: str,
-    probs: list[float],
-    level: str = "conv",
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """Per-entity quantile vector in ONE pass (`q_<p>` columns). The exact
-    equivalent sorts every group; this keeps a fixed-size sketch per group
-    and merges partials map-side."""
-    keys = keys_for(level)
-    aggs = [
-        F.percentile_approx(value_col, p, accuracy)
-        .cast("double")
-        .alias(f"q_{str(p).replace('.', '_')}")
-        for p in probs
-    ]
-    return df.groupBy(*keys).agg(*aggs)
-
-
-def approx_distinct(
-    df: DataFrame,
-    value_col: str | Column,
-    level: str = "conv",
-    rsd: float = 0.05,
-    out_col: str = "approx_distinct",
-) -> DataFrame:
-    """Per-entity HyperLogLog++ distinct estimate (relative standard
-    deviation ``rsd``; memory per group ~ (1.04/rsd)^2 registers, constant
-    in the data size)."""
-    keys = keys_for(level)
-    c = F.col(value_col) if isinstance(value_col, str) else value_col
-    return df.groupBy(*keys).agg(F.approx_count_distinct(c, rsd).alias(out_col))
-
-
-def approx_vocab_size(
-    df: DataFrame,
-    level: str = "conv",
-    text_col: str = "text",
-    rsd: float = 0.05,
-) -> DataFrame:
-    """Per-entity vocabulary size (distinct whitespace tokens), HLL++.
-    The exact form is lexdiv's explode+countDistinct — a full shuffle of
-    every token; this shuffles only the fixed-size HLL registers."""
-    toks = df.select(
-        *keys_for(level),
-        F.explode(ws_tokens_expr(F.col(text_col))).alias("tok"),
-    )
-    return approx_distinct(toks, "tok", level=level, rsd=rsd, out_col="vocab_size")
-
-
-def vocab_sketches(
-    df: DataFrame,
-    level: str = "conv",
-    text_col: str = "text",
-    lg_k: int = 12,
-) -> DataFrame:
-    """Per-entity MERGEABLE DataSketches HLL sketch of the token vocabulary
-    (binary column ``vocab_sketch``, ~2^lg_k bytes). Persist next to each
-    written shard; later range queries union sketches instead of rescanning
-    text (see ``merge_vocab_sketches``)."""
-    keys = keys_for(level)
-    toks = df.select(
-        *keys,
-        F.explode(ws_tokens_expr(F.col(text_col))).alias("tok"),
-    )
-    return toks.groupBy(*keys).agg(
-        F.hll_sketch_agg("tok", F.lit(lg_k)).alias("vocab_sketch")
-    )
-
-
-def merge_vocab_sketches(
-    sketches: DataFrame,
-    group_cols: list[str] | None = None,
-    sketch_col: str = "vocab_sketch",
-) -> DataFrame:
-    """Union pre-computed HLL sketches (optionally re-grouped to a coarser
-    grain, e.g. per-day sketches -> per-subject totals) and estimate the
-    distinct count. Input bytes: |groups| * sketch size — independent of the
-    corpus size the sketches summarize."""
-    merged = (
-        sketches.groupBy(*group_cols)
-        if group_cols
-        else sketches.groupBy(F.lit(1).alias("_g"))
-    )
-    out = merged.agg(F.hll_union_agg(sketch_col).alias("_u")).withColumn(
-        "distinct_estimate", F.hll_sketch_estimate("_u")
-    ).drop("_u")
-    return out.drop("_g") if not group_cols else out
 
 
 # ------------------------------------------------- Misra-Gries heavy hitters

@@ -131,21 +131,6 @@ def train_topics(
     )
 
 
-def topic_terms(model: TopicModel, top_n: int = 10) -> "list[list[tuple[str, float]]]":
-    """Per-topic top terms as (term, weight) lists — the reference's
-    ``show_topics`` view. Driver-side but bounded: k × top_n."""
-    rows = model.lda_model.describeTopics(top_n).collect()
-    out = []
-    for r in rows:
-        out.append(
-            [
-                (model.vocabulary[i], float(w))
-                for i, w in zip(r["termIndices"], r["termWeights"])
-            ]
-        )
-    return out
-
-
 def doc_topics(
     model: TopicModel,
     df: DataFrame,

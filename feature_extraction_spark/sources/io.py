@@ -187,32 +187,3 @@ def write_table(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path_or_table)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    num_buckets: int = 64,
-    sort_cols: list[str] | None = None,
-    file_format: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed (hash-clustered) table sink for co-located joins and aggs.
-
-    Bucketing pre-shuffles the table ONCE at write time: every downstream
-    join / groupBy on the bucket key then reads already-clustered data and
-    the per-query Exchange disappears (with sort_cols, the sort-merge
-    join's Sort goes too). At 100 TB the transcripts fact table is written
-    bucketed by conv_id, so the as-of joins, sessionization windows, and
-    per-conversation aggregations all skip the dominant shuffle — one
-    write-side cost amortized across every consumer query. The Iceberg
-    equivalent is a bucket(N, conv_id) partition transform."""
-    writer = (
-        df.write.format(file_format)
-        .mode(mode)
-        .bucketBy(num_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)

@@ -226,119 +226,6 @@ def read_snapshot(
     return spark.read.parquet(*paths)
 
 
-def merge_upsert(
-    updates: DataFrame,
-    table: str,
-    key_cols: tuple[str, ...] = ("id",),
-    delete_col: str | None = None,
-    broadcast_updates: bool = True,
-    assert_unique_keys: bool = False,
-) -> SnapshotInfo:
-    """Iceberg-style MERGE INTO over a snapshot table (copy-on-write):
-    rows of the current snapshot whose key appears in ``updates`` are
-    replaced (WHEN MATCHED UPDATE), unseen keys are inserted (WHEN NOT
-    MATCHED INSERT), and — with ``delete_col`` naming a boolean column —
-    flagged keys are removed (WHEN MATCHED AND <flag> DELETE). The result
-    commits as the next snapshot version; time travel to every previous
-    version is untouched, and a crash mid-merge leaves the table at its
-    parent version (commit_snapshot's marker is the commit point).
-
-    ``updates`` must be key-unique (the merge result would otherwise hold
-    duplicate rows for a key); ``assert_unique_keys=True`` verifies this
-    with one aggregate job before writing — opt-in, same contract-check
-    pattern as chunk.assert_unique_keys.
-
-    Scale notes (100 TB): the rewrite is ONE left-anti join of the
-    current snapshot against the update keys — broadcast when the update
-    batch is dimension-sized (the common case; ``broadcast_updates``), so
-    the big side never shuffles — plus the union'd insert rows. This is
-    whole-table COW, the right shape for merges that touch many
-    partitions; for narrow merges the refinement is a partitioned
-    snapshot layout whose untouched files carry into the new manifest by
-    reference (file-level pruning), which this store's single-dir data
-    layout deliberately keeps out of scope.
-    """
-    spark = updates.sparkSession
-    keys = list(key_cols)
-    if assert_unique_keys:
-        dup = (
-            updates.groupBy(*keys).count().filter(F.col("count") > 1).limit(1)
-        ).count()
-        if dup:
-            raise ValueError(f"updates are not unique on {keys}")
-    if delete_col is not None:
-        inserts = updates.filter(
-            ~F.coalesce(F.col(delete_col), F.lit(False))
-        ).drop(delete_col)
-        n_deletes = updates.filter(
-            F.coalesce(F.col(delete_col), F.lit(False))
-        ).count()
-    else:
-        inserts, n_deletes = updates, 0
-
-    parent = last_committed_version(spark, table)
-    if parent is None:
-        merged = inserts
-    else:
-        upd_keys = updates.select(*keys).distinct()
-        if broadcast_updates:
-            upd_keys = F.broadcast(upd_keys)
-        keep = read_snapshot(spark, table).join(upd_keys, keys, "left_anti")
-        merged = keep.unionByName(inserts)
-    return commit_snapshot(
-        merged,
-        table,
-        mode="overwrite",
-        extra_meta={"merge_keys": keys, "merge_deletes": int(n_deletes)},
-    )
-
-
-def rewrite_data_files(
-    spark: SparkSession,
-    table: str,
-    target_mb: int = 512,
-) -> SnapshotInfo:
-    """Compaction — the Iceberg rewrite_data_files maintenance action:
-    rewrite the current snapshot's data into ~``target_mb`` files and
-    commit the SAME rows as the next version. Append-heavy tables (every
-    micro-batch/merge commit adds a file set) accumulate small files
-    until scans pay per-file open/footer costs; at 100 TB the small-files
-    problem, not data volume, is what kills read throughput.
-
-    The file count is sized from the manifest's byte total (no data scan
-    before the rewrite): ceil(bytes / target_mb) — approximate, since
-    re-encoding changes compression, but within the 2x that matters.
-    Readers time-traveling to pre-compaction versions still see the old
-    file layout (manifests are immutable); `expire_snapshots` reclaims it.
-    """
-    if target_mb <= 0:
-        raise ValueError("target_mb must be positive")
-    v = last_committed_version(spark, table)
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot in {table}")
-    manifest = read_manifest(spark, table, v)
-    n_files = max(
-        1, -(-int(manifest["bytes"]) // (target_mb * 1024 * 1024))
-    )
-    compacted = read_snapshot(spark, table, v).repartition(n_files)
-    return commit_snapshot(
-        compacted,
-        table,
-        mode="overwrite",
-        extra_meta={
-            "rewrite_target_mb": target_mb,
-            "rewrite_files_before": len(manifest["files"]),
-        },
-    )
-
-
-def snapshot_versions(spark: SparkSession, table: str) -> list[int]:
-    """All COMMITTED versions (commit markers present), ascending. A
-    manifest without its marker is a crashed in-flight write and is not
-    listed — time travel can never land on an uncommitted snapshot."""
-    return _committed_versions(spark, table)
-
-
 def expire_snapshots(
     spark: SparkSession, table: str, keep_last: int = 2
 ) -> dict:

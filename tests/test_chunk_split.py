@@ -127,17 +127,20 @@ def test_hash_split_deterministic_and_salt_sensitive(spark):
 
 
 def test_hash_sample_nested_and_proportional(spark):
-    from feature_extraction_spark.ops.chunk import hash_sample
-
+    """The keys ``hash_split`` labels "a" at a 0.2 fraction are a subset of
+    those it labels "a" at 0.5 (same salt): a fraction draw is nested."""
     keys = spark.range(0, 10_000).select(F.col("id").cast("string").alias("k"))
-    s20 = {r["k"] for r in hash_sample(keys, 0.2, "k").collect()}
-    s50 = {r["k"] for r in hash_sample(keys, 0.5, "k").collect()}
+
+    def draw(frac):
+        split = hash_split(keys, "k", {"a": frac, "b": 1.0 - frac})
+        return {r["k"] for r in split.filter(F.col("split") == "a").collect()}
+
+    s20, s50 = draw(0.2), draw(0.5)
     assert s20.issubset(s50)  # nested thresholds
     assert abs(len(s20) / 10_000 - 0.2) < 0.02
     assert abs(len(s50) / 10_000 - 0.5) < 0.02
-    # group-intact: sampling transcripts by conv_id keeps convs whole
-    assert hash_sample(keys, 0.0, "k").count() == 0
-    assert hash_sample(keys, 1.0, "k").count() == 10_000
+    assert draw(0.0) == set()
+    assert len(draw(1.0)) == 10_000
 
 
 def test_mixture_sample_rates_and_drops(spark):

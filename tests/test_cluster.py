@@ -8,7 +8,6 @@ import pytest
 
 from feature_extraction_spark.ops.cluster import (
     connected_components,
-    dedup_by_clusters,
     neardup_clusters,
 )
 
@@ -116,17 +115,6 @@ def test_neardup_clusters_total_mapping(spark):
     assert out == {0: 0, 1: 1, 2: 2, 3: 1, 4: 4, 5: 1, 6: 6, 7: 6}
 
 
-def test_dedup_by_clusters_keeps_canonical(spark):
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(6)], "doc_id long, text string"
-    )
-    pairs = spark.createDataFrame([(0, 4), (4, 2), (1, 5)], "id_a long, id_b long")
-    kept = sorted(
-        r["doc_id"] for r in dedup_by_clusters(docs, pairs).select("doc_id").collect()
-    )
-    assert kept == [0, 1, 3]
-
-
 def test_embedding_neardup_to_clusters(spark):
     """The clustering stage composes with the embedding near-dup pair
     generator unchanged: cosine pairs in, canonical keep-list out."""
@@ -142,13 +130,14 @@ def test_embedding_neardup_to_clusters(spark):
         rows.append((i, [float(x) for x in v / np.linalg.norm(v)]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     pairs = cosine_neardup_pairs(emb, threshold=0.99, method="exact")
-    kept = sorted(
-        r["vec_id"]
-        for r in dedup_by_clusters(
+    got = {
+        r["vec_id"]: r["cluster_id"]
+        for r in neardup_clusters(
             emb, pairs, id_col="vec_id", src="id_a", dst="id_b"
         ).collect()
-    )
-    assert kept == [0, 1, 2, 3]  # one canonical vector per cluster
+    }
+    # one cluster per base vector, labelled by its canonical (min) member
+    assert got == {i: i % 4 for i in range(20)}
 
 
 def test_dedup_pipeline_pairs_to_keep_list(spark):
@@ -171,10 +160,12 @@ def test_dedup_pipeline_pairs_to_keep_list(spark):
         rows.append((i, " ".join(words)))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = ngram_jaccard_pairs(docs, n=3, threshold=0.5, max_shingle_df=None)
-    kept = sorted(
-        r["doc_id"] for r in dedup_by_clusters(docs, pairs).select("doc_id").collect()
-    )
-    assert kept == [0, 1, 2]
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in neardup_clusters(docs, pairs).collect()
+    }
+    assert got == {i: i % 3 for i in range(12)}
+    assert sorted(set(got.values())) == [0, 1, 2]  # the keep-list
 
 
 def test_cc_distributed_path_under_ansi(spark):
@@ -190,23 +181,6 @@ def test_cc_distributed_path_under_ansi(spark):
         spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
-def test_dedup_by_clusters_stale_pairs_keep_surviving_member(spark):
-    """Regression (round-2 review): pairs may reference ids no longer in
-    df (stale pair table); the canonical must be the min PRESENT member,
-    never 'drop everyone because the labeled min is gone'."""
-    docs = spark.createDataFrame(
-        [(5, "a"), (7, "a"), (9, "b")], "doc_id long, text string"
-    )
-    # id 1 was deleted from the corpus but remains in the pair table
-    pairs = spark.createDataFrame(
-        [(1, 5), (5, 7)], "id_a long, id_b long"
-    )
-    kept = sorted(
-        r["doc_id"] for r in dedup_by_clusters(docs, pairs).collect()
-    )
-    assert kept == [5, 9]
-
-
 def test_cc_reliable_checkpoint_dir(spark, tmp_path):
     """checkpoint_dir routes the per-round materialization through
     snapshot-committed tables: labels identical to the localCheckpoint
@@ -215,8 +189,8 @@ def test_cc_reliable_checkpoint_dir(spark, tmp_path):
     import random
 
     from feature_extraction_spark.sources.snapshots import (
+        _committed_versions,
         read_snapshot,
-        snapshot_versions,
     )
 
     rng = random.Random(11)
@@ -235,7 +209,7 @@ def test_cc_reliable_checkpoint_dir(spark, tmp_path):
     e = read_snapshot(spark, f"{ckpt}/cc_edges")
     assert e.count() > 0
     # retention: superseded rounds expired, at most 2 versions kept
-    assert len(snapshot_versions(spark, f"{ckpt}/cc_rounds")) <= 2
+    assert len(_committed_versions(spark, f"{ckpt}/cc_rounds")) <= 2
 
 
 def test_minhash_dedup_checkpoint_dir_matches_default(spark, tmp_path):

@@ -1,12 +1,12 @@
 """Streaming feature-store maintenance: incremental snapshot state ==
 batch recomputation, and batch-replay idempotency."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from feature_extraction_spark.ops.incremental import finalize_stat_state
+from feature_extraction_spark.ops.incremental import partial_stat_state
 from feature_extraction_spark.sources.snapshots import (
+    _committed_versions,
     last_committed_version,
     read_manifest,
     read_snapshot,
@@ -14,12 +14,17 @@ from feature_extraction_spark.sources.snapshots import (
 from feature_extraction_spark.streaming.feature_store import make_state_upserter
 
 
-def _expected(pdf, value_col="value"):
-    g = pdf.groupby("conv_id")[value_col]
-    return {
-        cid: (s.count(), s.mean(), s.std(ddof=0), s.min(), s.max())
-        for cid, s in g
-    }
+def _state_rows(state):
+    cols = ("conv_id", "n", "sum", "sumsq", "min", "max")
+    return sorted(state.select(*cols).collect())
+
+
+def _assert_state_equals_batch(spark, state, t):
+    """The streamed state's raw (n, sum, sumsq, min, max) per entity equal
+    one ``partial_stat_state`` over all of the input ``t``. Exact: the
+    values are integer text lengths, so every sum is exact in a double."""
+    got = _state_rows(read_snapshot(spark, state))
+    assert got == _state_rows(partial_stat_state(t, "value"))
 
 
 def _turns_with_value(transcripts):
@@ -65,19 +70,7 @@ def test_stream_state_matches_batch_over_two_catchups(
     v2 = last_committed_version(spark, state)
     assert v2 > v1
 
-    got = (
-        finalize_stat_state(read_snapshot(spark, state), "v")
-        .toPandas()
-        .set_index("conv_id")
-    )
-    exp = _expected(t.toPandas())
-    assert set(got.index) == set(exp)
-    for cid, (n, mu, sd, lo, hi) in exp.items():
-        row = got.loc[cid]
-        assert np.allclose(
-            [row["v_count"], row["v_mean"], row["v_std"], row["v_min"], row["v_max"]],
-            [n, mu, sd, lo, hi],
-        ), cid
+    _assert_state_equals_batch(spark, state, t)
 
 
 def test_upsert_replay_is_idempotent(spark, transcripts, tmp_path):
@@ -100,10 +93,7 @@ def test_upsert_replay_is_idempotent(spark, transcripts, tmp_path):
     assert last_committed_version(spark, state) == v_after + 1
     m = read_manifest(spark, state, v_after + 1)
     assert m["stream_batch_id"] == 1
-    doubled = (
-        finalize_stat_state(read_snapshot(spark, state), "v").toPandas()
-    )
-    assert np.allclose(doubled["v_count"].sum(), 2 * len(t.toPandas()))
+    _assert_state_equals_batch(spark, state, t.unionByName(t))
 
 
 def test_fresh_checkpoint_raises_not_silently_skips(spark, transcripts, tmp_path):
@@ -142,8 +132,6 @@ def test_retention_bounds_snapshot_storage(spark, transcripts, tmp_path):
     """An always-on stream overwrite-commits a full state copy per batch;
     keep_snapshots must bound the table directory instead of letting it
     grow as batches x |state|."""
-    from feature_extraction_spark.sources.snapshots import snapshot_versions
-
     state = str(tmp_path / "state4")
     t = _turns_with_value(transcripts).limit(300)
     up = make_state_upserter(
@@ -151,12 +139,10 @@ def test_retention_bounds_snapshot_storage(spark, transcripts, tmp_path):
     )
     for b in range(5):
         up(t.filter(F.col("turn_idx") % 5 == b), b)
-    vs = snapshot_versions(spark, state)
+    vs = _committed_versions(spark, state)
     assert vs == [4, 5]  # exactly keep_snapshots survivors
     # latest state still reads fine and equals the full-batch aggregation
-    got = finalize_stat_state(read_snapshot(spark, state), "v").toPandas()
-    exp = _expected(t.toPandas())
-    assert set(got["conv_id"]) == set(exp)
+    _assert_state_equals_batch(spark, state, t)
 
 
 def test_crash_between_microbatches_restart_equals_uninterrupted(
@@ -218,15 +204,7 @@ def test_crash_between_microbatches_restart_equals_uninterrupted(
     ckpt_ref = str(tmp_path / "ref_ckpt")
     _catchup(reader(), state_ref, ckpt_ref).awaitTermination(120)
 
-    got = (
-        finalize_stat_state(read_snapshot(spark, state), "v")
-        .orderBy("conv_id").toPandas()
-    )
-    ref = (
-        finalize_stat_state(read_snapshot(spark, state_ref), "v")
-        .orderBy("conv_id").toPandas()
-    )
-    assert got.equals(ref)
-    # and both equal the plain batch aggregation
-    exp = _expected(t.toPandas())
-    assert set(got["conv_id"]) == set(exp)
+    got = _state_rows(read_snapshot(spark, state))
+    assert got == _state_rows(read_snapshot(spark, state_ref))
+    # and both equal the plain batch aggregation of the source
+    _assert_state_equals_batch(spark, state, spark.read.parquet(src))

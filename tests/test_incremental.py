@@ -1,19 +1,14 @@
 """Incremental aggregation (ops/incremental.py): the merge algebra equals
-the batch answer, snapshot deltas read only new files, and the end-to-end
-snapshot-to-snapshot maintenance loop survives appends."""
+the batch answer."""
 
 import math
 
 import pyspark.sql.functions as F
 
 from feature_extraction_spark.ops.incremental import (
-    finalize_stat_state,
-    incremental_stat_update,
     merge_stat_states,
     partial_stat_state,
-    snapshot_delta,
 )
-from feature_extraction_spark.sources.snapshots import commit_snapshot
 from feature_extraction_spark.synth import synth_transcripts
 
 
@@ -37,23 +32,27 @@ def _batch_stats(df):
     }
 
 
-def _check_equals_batch(final_rows, batch):
-    got = {r["conv_id"]: r for r in final_rows}
+def _check_equals_batch(state_rows, batch):
+    """Finalize each state row at read time (count n, mean sum/n,
+    population std from sumsq) and compare with the batch aggregates."""
+    got = {r["conv_id"]: r for r in state_rows}
     assert set(got) == set(batch)
     for k, b in batch.items():
         g = got[k]
-        assert g["wc_count"] == b["c"]
-        assert math.isclose(g["wc_mean"], b["m"], rel_tol=1e-9)
-        assert math.isclose(g["wc_std"], b["s"], rel_tol=1e-6, abs_tol=1e-9)
-        assert g["wc_min"] == b["lo"] and g["wc_max"] == b["hi"]
+        mean = g["sum"] / g["n"]
+        std = math.sqrt(max(g["sumsq"] / g["n"] - mean * mean, 0.0))
+        assert g["n"] == b["c"]
+        assert math.isclose(mean, b["m"], rel_tol=1e-9)
+        assert math.isclose(std, b["s"], rel_tol=1e-6, abs_tol=1e-9)
+        assert g["min"] == b["lo"] and g["max"] == b["hi"]
 
 
 def test_partial_merge_finalize_equals_batch(spark):
     parts = [synth_transcripts(spark, n_convs=30, seed=s) for s in (1, 2, 3)]
     whole = parts[0].unionByName(parts[1]).unionByName(parts[2])
     states = [partial_stat_state(_wc(p), "wc") for p in parts]
-    final = finalize_stat_state(merge_stat_states(*states), "wc").collect()
-    _check_equals_batch(final, _batch_stats(whole))
+    merged = merge_stat_states(*states).collect()
+    _check_equals_batch(merged, _batch_stats(whole))
 
 
 def test_merge_handles_disjoint_and_overlapping_entities(spark):
@@ -66,74 +65,10 @@ def test_merge_handles_disjoint_and_overlapping_entities(spark):
     merged = merge_stat_states(
         partial_stat_state(a, "v"), partial_stat_state(b, "v")
     )
-    out = {r["conv_id"]: r for r in finalize_stat_state(merged, "v").collect()}
-    assert out["c1"]["v_count"] == 2 and out["c1"]["v_mean"] == 2.0
-    assert out["c2"]["v_count"] == 2 and out["c2"]["v_mean"] == 15.0
-    assert out["c3"]["v_count"] == 1 and out["c3"]["v_std"] == 0.0
-
-
-def test_snapshot_delta_reads_only_new_files(spark, tmp_path):
-    table = str(tmp_path / "snap_src")
-    t1 = synth_transcripts(spark, n_convs=20, seed=1)
-    s1 = commit_snapshot(t1, table, mode="overwrite")
-    t2 = synth_transcripts(spark, n_convs=20, seed=2)
-    commit_snapshot(t2, table, mode="append")
-
-    delta = snapshot_delta(spark, table, from_version=s1.version)
-    assert delta.count() == t2.count()
-    # the delta scan's file list excludes every v1 file
-    files = delta.inputFiles()
-    assert files and all("/v2/" in f for f in files)
-    # no delta between identical versions
-    assert snapshot_delta(spark, table, from_version=2, to_version=2) is None
-
-
-def test_incremental_update_loop_equals_batch(spark, tmp_path):
-    src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-    batches = [synth_transcripts(spark, n_convs=25, seed=s) for s in (5, 6, 7)]
-
-    commit_snapshot(_wc(batches[0]), src, mode="overwrite")
-    assert incremental_stat_update(spark, src, state, "wc") == 1
-    # nothing new -> no-op
-    assert incremental_stat_update(spark, src, state, "wc") is None
-
-    for i, b in enumerate(batches[1:], start=2):
-        commit_snapshot(_wc(b), src, mode="append")
-        assert incremental_stat_update(spark, src, state, "wc") == i
-
-    from feature_extraction_spark.sources.snapshots import read_snapshot
-
-    final = finalize_stat_state(
-        read_snapshot(spark, state).drop("_src_version"), "wc"
-    ).collect()
-    whole = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    _check_equals_batch(final, _batch_stats(whole))
-
-
-def test_incremental_update_resets_after_source_overwrite(spark, tmp_path):
-    """Regression (round-2 review): an overwrite commit on the source must
-    NOT be treated as a delta (double counting); the state rebuilds from
-    the full snapshot and still equals the batch answer."""
-    src = str(tmp_path / "src_ow")
-    state = str(tmp_path / "state_ow")
-    b1 = synth_transcripts(spark, n_convs=20, seed=1)
-    b2 = synth_transcripts(spark, n_convs=20, seed=2)
-    commit_snapshot(_wc(b1), src, mode="overwrite")
-    assert incremental_stat_update(spark, src, state, "wc") == 1
-    # source fully rewritten (e.g. re-clean): same + new data in one commit
-    commit_snapshot(_wc(b1.unionByName(b2)), src, mode="overwrite")
-    assert incremental_stat_update(spark, src, state, "wc") == 2
-
-    from feature_extraction_spark.ops.incremental import snapshot_delta
-    from feature_extraction_spark.sources.snapshots import read_snapshot
-
-    final = finalize_stat_state(
-        read_snapshot(spark, state).drop("_src_version"), "wc"
-    ).collect()
-    _check_equals_batch(final, _batch_stats(b1.unionByName(b2)))
-    # and the raw delta API refuses to cross the overwrite
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="append-ancestor"):
-        snapshot_delta(spark, src, from_version=1, to_version=2)
+    out = {r["conv_id"]: r.asDict() for r in merged.collect()}
+    assert out["c1"] == dict(conv_id="c1", n=2, sum=4.0, sumsq=10.0,
+                             min=1.0, max=3.0)
+    assert out["c2"] == dict(conv_id="c2", n=2, sum=30.0, sumsq=500.0,
+                             min=10.0, max=20.0)
+    assert out["c3"] == dict(conv_id="c3", n=1, sum=5.0, sumsq=25.0,
+                             min=5.0, max=5.0)

@@ -8,7 +8,6 @@ from feature_extraction_spark.ops.quality_model import (
     quality_filter,
     score_quality,
     train_quality_classifier,
-    weak_labels_from_gopher,
 )
 
 GOOD = [
@@ -80,6 +79,10 @@ def test_quality_filter_threshold(labeled, model):
 
 
 def test_gopher_weak_labels_train_end_to_end(spark):
+    """The Gopher keep-decision as a weak label trains a classifier that
+    scores the kept documents above the rejected ones."""
+    from feature_extraction_spark.ops.gopher import with_gopher_quality
+
     # long docs that pass gopher's min_words=50 WITHOUT tripping the
     # duplicate-n-gram rules: each joins all four distinct good sentences
     # with a per-doc marker (repeating one sentence x4 fails dup_5gram)
@@ -89,7 +92,9 @@ def test_gopher_weak_labels_train_end_to_end(spark):
     ]
     bad_long = [(100 + i, (BAD[i % len(BAD)] + " ") * 4) for i in range(6)]
     df = spark.createDataFrame(good_long + bad_long, "doc_id long, text string")
-    lab = weak_labels_from_gopher(df)
+    lab = with_gopher_quality(df).withColumn(
+        "label", F.col("gopher_keep").cast("double")
+    )
     counts = {r.label: r["count"] for r in lab.groupBy("label").count().collect()}
     assert counts.get(1.0, 0) > 0 and counts.get(0.0, 0) > 0
     m = train_quality_classifier(lab.select("doc_id", "text", "label"))

@@ -4,7 +4,7 @@ import numpy as np
 import pytest
 
 from feature_extraction_spark.oracle import kernels as ok
-from feature_extraction_spark.ops.ranking import bm25_topk, term_counts, tfidf_matrix
+from feature_extraction_spark.ops.ranking import bm25_topk
 
 DOCS = [
     (0, "hash join beats nested loop join on large tables"),
@@ -53,33 +53,6 @@ def test_bm25_repeated_query_terms_dedup(docs_df):
     a = bm25_topk(docs_df, "join join hash scan hash", k=8).toPandas()
     b = bm25_topk(docs_df, "join hash scan", k=8).toPandas()
     assert a.equals(b)
-
-
-def test_tfidf_matrix_parity(docs_df):
-    import math
-
-    got = tfidf_matrix(docs_df).toPandas()
-    texts = {i: t for i, t in DOCS}
-    toks = {
-        i: [w for w in (t or "").lower().split() if w] for i, t in texts.items()
-    }
-    n = len(toks)
-    for _, r in got.iterrows():
-        tf = toks[r["doc_id"]].count(r["term"])
-        df = sum(1 for ws in toks.values() if r["term"] in ws)
-        assert r["tf"] == tf and r["df"] == df
-        assert np.allclose(
-            r["tfidf"], tf * (math.log((1 + n) / (1 + df)) + 1)
-        )
-    # every (doc, term) pair present exactly once
-    assert not got.duplicated(["doc_id", "term"]).any()
-    assert got["tf"].sum() == sum(len(ws) for ws in toks.values())
-
-
-def test_term_counts_null_text(docs_df):
-    tc = term_counts(docs_df).toPandas()
-    # NULL/empty docs contribute no terms but must not crash
-    assert set(tc["doc_id"]) == {0, 1, 2, 5, 6, 7}
 
 
 def test_bm25_no_corpus_grain_shuffle(docs_df):

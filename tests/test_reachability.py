@@ -1,11 +1,13 @@
 """Every public top-level function and class of the package has a caller
-outside tests/, or an entry with a reason on the allow-list below.
+outside tests/, or an entry with a reason on the allow-list below; every
+private one has a caller outside tests/, with no allow-list.
 
 A reference is a Name, an Attribute or an import alias in any .py file of
 the repository outside tests/ (the package itself, scripts/, perfbench/,
 bench.py, __spark_entry__.py). A new helper that only tests reach fails
-here instead of growing the library; an allow-list entry whose name gained
-a caller, or no longer exists, fails too, so the list only shrinks.
+here instead of growing the library, and so does a private helper whose
+last caller was deleted; an allow-list entry whose name gained a caller,
+or no longer exists, fails too, so the list only shrinks.
 """
 
 import ast
@@ -19,6 +21,10 @@ READER = "reference input reader, driven by tests over fixture files"
 SYNTH = "synthetic fixture generator"
 NORTH = "north-rule engine piece"
 ROW = "COVERAGE.md reference-operator row"
+TRAINER = (
+    "trainer of a frozen registry literal: "
+    "tests/test_trainer_provenance.py re-fits it"
+)
 BACKLOG = "no caller outside tests yet: a deletion candidate"
 
 ALLOW = {
@@ -46,37 +52,19 @@ ALLOW = {
     "with_turn_order": ROW + " W1",
     "sentence_split_expr": ROW + " U7",
     "basic_clean": "README reference map: archived/preprocess_text.py",
-    "approx_quantiles": BACKLOG,
-    "approx_stat_bundle": BACKLOG,
-    "approx_vocab_size": BACKLOG,
-    "vocab_sketches": BACKLOG,
-    "merge_vocab_sketches": BACKLOG,
-    "dedup_by_clusters": BACKLOG,
-    "finalize_stat_state": BACKLOG,
-    "incremental_stat_update": BACKLOG,
-    "hash_sample": BACKLOG,
-    "merge_upsert": BACKLOG,
-    "rewrite_data_files": BACKLOG,
-    "snapshot_versions": BACKLOG,
-    "write_bucketed": BACKLOG,
-    "pack_sequences": BACKLOG,
-    "pq_train": BACKLOG,
+    "pq_train": TRAINER + " (_PQ_CODEBOOK)",
+    "train_quality_classifier": TRAINER + " (_QM_COEF, _QM_INTERCEPT)",
     "stage_counts": BACKLOG,
-    "target_encode": BACKLOG,
-    "tfidf_matrix": BACKLOG,
-    "topic_terms": BACKLOG,
-    "train_quality_classifier": BACKLOG,
-    "weak_labels_from_gopher": BACKLOG,
 }
 
 
-def _public_defs() -> set[str]:
+def _top_level_defs(private: bool) -> set[str]:
     names = set()
     for f in PKG.rglob("*.py"):
         for node in ast.parse(f.read_text()).body:
             if isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ) and not node.name.startswith("_"):
+            ) and node.name.startswith("_") == private:
                 names.add(node.name)
     return names
 
@@ -98,7 +86,7 @@ def _references() -> set[str]:
 
 
 def test_public_names_have_a_caller_outside_tests():
-    unreached = _public_defs() - _references()
+    unreached = _top_level_defs(private=False) - _references()
     assert sorted(unreached - ALLOW.keys()) == [], (
         "public names reached only from tests: give them a caller, make "
         "them private, or delete them"
@@ -106,4 +94,11 @@ def test_public_names_have_a_caller_outside_tests():
     assert sorted(ALLOW.keys() - unreached) == [], (
         "allow-list entries that now have a caller or no longer exist: "
         "drop them from ALLOW"
+    )
+
+
+def test_private_helpers_have_a_caller_outside_tests():
+    unreached = _top_level_defs(private=True) - _references()
+    assert sorted(unreached) == [], (
+        "private helpers no code outside tests/ reaches: delete them"
     )

@@ -1,132 +1,6 @@
 """Sketch aggregates (ops/sketches.py): every approximation is tested
 against the exact answer with its published error bound."""
 
-import math
-
-import pyspark.sql.functions as F
-
-from feature_extraction_spark.ops.sketches import (
-    approx_distinct,
-    approx_quantiles,
-    approx_stat_bundle,
-    approx_vocab_size,
-    merge_vocab_sketches,
-    vocab_sketches,
-)
-
-
-def test_approx_stat_bundle_matches_exact_on_small_groups(spark, transcripts):
-    """At accuracy=10^4 and group sizes << accuracy the sketch median is
-    EXACTLY a data value at rank error 0 — equal to Spark's exact median
-    for odd-sized groups and within the middle pair for even ones."""
-    wc = F.size(F.split("text", " ", -1)).cast("double")
-    t = transcripts.withColumn("wc", wc)
-    approx = t.groupBy("conv_id").agg(*approx_stat_bundle("wc", "wc"))
-    exact = t.groupBy("conv_id").agg(
-        F.max("wc").alias("e_max"),
-        F.min("wc").alias("e_min"),
-        F.mean("wc").alias("e_mean"),
-        F.expr("percentile(wc, 0.5)").alias("e_med"),
-        F.stddev_pop("wc").alias("e_std"),
-        F.sort_array(F.collect_list("wc")).alias("vals"),
-    )
-    j = approx.join(exact, "conv_id").collect()
-    assert len(j) > 0
-    for r in j:
-        assert r["wc_max"] == r["e_max"] and r["wc_min"] == r["e_min"]
-        assert math.isclose(r["wc_mean"], r["e_mean"], rel_tol=1e-12)
-        # sketch median must be an actual data value in the middle pair
-        vals, n = r["vals"], len(r["vals"])
-        lo, hi = vals[(n - 1) // 2], vals[n // 2]
-        assert lo <= r["wc_med"] <= hi
-
-
-def test_approx_quantiles_rank_error(spark, transcripts):
-    t = transcripts.withColumn(
-        "wc", F.size(F.split("text", " ", -1)).cast("double")
-    )
-    qs = approx_quantiles(t, "wc", [0.1, 0.5, 0.9], level="conv", accuracy=10_000)
-    exact = t.groupBy("conv_id").agg(
-        F.sort_array(F.collect_list("wc")).alias("vals")
-    )
-    for r in qs.join(exact, "conv_id").collect():
-        vals = r["vals"]
-        n = len(vals)
-        for p, col in [(0.1, "q_0_1"), (0.5, "q_0_5"), (0.9, "q_0_9")]:
-            # rank error <= 1/accuracy -> exact rank at these group sizes,
-            # but allow +-1 rank for boundary-interpolation differences
-            ranks = [i for i, v in enumerate(vals) if v == r[col]]
-            assert ranks, f"quantile {p} returned a non-data value"
-            target = p * (n - 1)
-            assert min(abs(i - target) for i in ranks) <= 1.0 + n / 10_000
-
-
-def test_approx_distinct_within_hll_bound(spark, transcripts):
-    rsd = 0.05
-    got = approx_distinct(
-        transcripts, F.col("turn_idx") % 97, level="conv", rsd=rsd
-    )
-    exact = transcripts.groupBy("conv_id").agg(
-        F.countDistinct(F.col("turn_idx") % 97).alias("exact")
-    )
-    for r in got.join(exact, "conv_id").collect():
-        # 4 standard deviations: P(violation) ~ 6e-5 per group
-        assert abs(r["approx_distinct"] - r["exact"]) <= max(
-            4 * rsd * r["exact"], 2
-        ), (r["conv_id"], r["approx_distinct"], r["exact"])
-
-
-def test_approx_vocab_size_vs_exact(spark, transcripts):
-    rsd = 0.05
-    got = {r["conv_id"]: r["vocab_size"] for r in approx_vocab_size(
-        transcripts, level="conv", rsd=rsd
-    ).collect()}
-    toks = transcripts.select(
-        "conv_id",
-        F.explode(
-            F.filter(F.split("text", r"\s+", -1), lambda w: F.length(w) > 0)
-        ).alias("tok"),
-    )
-    exact = {
-        r["conv_id"]: r["n"]
-        for r in toks.groupBy("conv_id").agg(F.countDistinct("tok").alias("n")).collect()
-    }
-    assert set(got) == set(exact)
-    for k, e in exact.items():
-        assert abs(got[k] - e) <= max(4 * rsd * e, 2), (k, got[k], e)
-
-
-def test_vocab_sketches_merge_equals_whole_corpus(spark, transcripts):
-    """The 100 TB pattern: per-day sketches unioned == one corpus sketch —
-    both estimates must agree with each other and with the exact count
-    within the lg_k=12 HLL bound (~1.6% rsd)."""
-    t = transcripts
-    per_day = vocab_sketches(
-        t.withColumn("day", F.to_date("ts")).withColumnRenamed("conv_id", "_c")
-        .withColumnRenamed("day", "conv_id"),
-        level="conv",
-    )
-    merged = merge_vocab_sketches(per_day).collect()[0]["distinct_estimate"]
-    toks = t.select(
-        F.explode(
-            F.filter(F.split("text", r"\s+", -1), lambda w: F.length(w) > 0)
-        ).alias("tok")
-    )
-    exact = toks.agg(F.countDistinct("tok").alias("n")).collect()[0]["n"]
-    assert abs(merged - exact) <= max(0.08 * exact, 3), (merged, exact)
-
-
-def test_vocab_sketch_regroup_to_coarser_grain(spark, transcripts):
-    """Per-conv sketches re-merged to one group per conv prefix: union at a
-    coarser grain answers range queries without touching the text again."""
-    sk = vocab_sketches(transcripts, level="conv").withColumn(
-        "bucket", F.substring("conv_id", 1, 9)
-    )
-    out = merge_vocab_sketches(sk, group_cols=["bucket"])
-    rows = out.collect()
-    assert len(rows) >= 1
-    assert all(r["distinct_estimate"] > 0 for r in rows)
-
 
 def test_heavy_hitters_exact_when_capacity_suffices(spark, transcripts):
     from collections import Counter

@@ -8,10 +8,10 @@ import posixpath
 import pyspark.sql.functions as F
 
 from feature_extraction_spark.sources.snapshots import (
+    _committed_versions,
     commit_snapshot,
     last_committed_version,
     read_snapshot,
-    snapshot_versions,
 )
 
 
@@ -36,7 +36,7 @@ def test_append_and_time_travel(spark, tmp_path):
     commit_snapshot(_df(spark, 0, 50), table)
     info2 = commit_snapshot(_df(spark, 50, 80), table, mode="append")
     assert info2.version == 2 and info2.rows == 80
-    assert snapshot_versions(spark, table) == [1, 2]
+    assert _committed_versions(spark, table) == [1, 2]
     assert read_snapshot(spark, table).count() == 80  # latest = union
     assert read_snapshot(spark, table, version=1).count() == 50  # time travel
     # overwrite drops history from the live view but keeps old snapshots
@@ -139,7 +139,6 @@ def test_manifest_without_marker_is_uncommitted(spark, tmp_path):
     import json as _json
 
     from feature_extraction_spark.fsutil import fs_write_text
-    from feature_extraction_spark.sources.snapshots import snapshot_versions
 
     table = "file://" + str(tmp_path / "t_mf")
     commit_snapshot(_df(spark, 0, 40), table)
@@ -154,7 +153,7 @@ def test_manifest_without_marker_is_uncommitted(spark, tmp_path):
                      "new_rows": 5, "bytes": 0, "files": [], "wall_s": 0}),
     )
     assert last_committed_version(spark, table) == 1
-    assert snapshot_versions(spark, table) == [1]
+    assert _committed_versions(spark, table) == [1]
     import pytest as _pytest
 
     with _pytest.raises(FileNotFoundError, match="never committed"):
@@ -172,7 +171,7 @@ def test_expire_snapshots_retention_and_time_travel_cutoff(spark, tmp_path):
     out = expire_snapshots(spark, table, keep_last=2)
     assert out["expired"] == [1, 2] and out["kept"] == [3, 4]
     assert out["deleted_bytes"] > 0
-    assert snapshot_versions(spark, table) == [3, 4]
+    assert _committed_versions(spark, table) == [3, 4]
     assert read_snapshot(spark, table).count() == 40  # latest untouched
     assert read_snapshot(spark, table, version=3).count() == 30
     with pytest.raises(FileNotFoundError):
@@ -200,110 +199,3 @@ def test_expire_keeps_data_shared_via_append_manifests(spark, tmp_path):
     assert got.count() == 90
     assert got.agg(F.sum("v")).collect()[0][0] == sum(2 * i for i in range(90))
     assert out["deleted_bytes"] == 0  # nothing was safe to delete
-
-
-def test_merge_upsert_insert_update_delete(spark, tmp_path):
-    from feature_extraction_spark.sources.snapshots import (
-        merge_upsert,
-        read_manifest,
-    )
-
-    t = str(tmp_path / "merge_tbl")
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "id long, val string"
-    )
-    info0 = commit_snapshot(base, t)
-    # update id=2, insert id=4, delete id=3
-    ups = spark.createDataFrame(
-        [(2, "B", False), (4, "d", False), (3, None, True)],
-        "id long, val string, _del boolean",
-    )
-    info1 = merge_upsert(ups, t, key_cols=("id",), delete_col="_del")
-    got = {
-        r["id"]: r["val"] for r in read_snapshot(spark, t).collect()
-    }
-    assert got == {1: "a", 2: "B", 4: "d"}
-    # previous version untouched (time travel)
-    old = {r["id"]: r["val"] for r in read_snapshot(spark, t, info0.version).collect()}
-    assert old == {1: "a", 2: "b", 3: "c"}
-    man = read_manifest(spark, t, info1.version)
-    assert man["merge_keys"] == ["id"] and man["merge_deletes"] == 1
-
-
-def test_merge_upsert_first_commit_and_unique_guard(spark, tmp_path):
-    import pytest as _pytest
-
-    from feature_extraction_spark.sources.snapshots import merge_upsert
-
-    t = str(tmp_path / "merge_new")
-    ups = spark.createDataFrame([(1, "x"), (2, "y")], "id long, val string")
-    merge_upsert(ups, t)
-    assert read_snapshot(spark, t).count() == 2
-
-    dup = spark.createDataFrame([(1, "x"), (1, "z")], "id long, val string")
-    with _pytest.raises(ValueError):
-        merge_upsert(dup, t, assert_unique_keys=True)
-    # without the opt-in check it commits (documented contract)
-    merge_upsert(spark.createDataFrame([(3, "w")], "id long, val string"), t)
-    assert read_snapshot(spark, t).count() == 3
-
-
-def test_merge_upsert_broadcast_no_big_side_shuffle(spark, tmp_path):
-    from feature_extraction_spark.sources.snapshots import merge_upsert
-
-    t = str(tmp_path / "merge_plan")
-    base = spark.range(0, 1000).withColumn("val", F.col("id") * 2)
-    commit_snapshot(base, t)
-    ups = spark.createDataFrame([(5, 99), (2000, 1)], "id long, val long")
-    upd_keys = F.broadcast(ups.select("id").distinct())
-    keep = read_snapshot(spark, t).join(upd_keys, ["id"], "left_anti")
-    plan = keep._jdf.queryExecution().executedPlan().toString()
-    # the only exchange allowed is the dimension-sized distinct on the
-    # update keys; the snapshot side feeds the broadcast join unshuffled
-    assert "BroadcastHashJoin" in plan
-    assert plan.count("Exchange hashpartitioning") <= 1
-    # end-to-end merge correctness at this size
-    merge_upsert(ups, t, key_cols=("id",))
-    out = read_snapshot(spark, t)
-    assert out.count() == 1001
-    assert out.filter("id = 5").collect()[0]["val"] == 99
-
-
-def test_rewrite_data_files_compacts_and_preserves_rows(spark, tmp_path):
-    from feature_extraction_spark.sources.snapshots import (
-        read_manifest,
-        rewrite_data_files,
-    )
-
-    t = str(tmp_path / "compact_tbl")
-    # append-heavy history -> many small files in the live manifest
-    for i in range(4):
-        commit_snapshot(
-            spark.range(i * 100, (i + 1) * 100).repartition(4),
-            t,
-            mode="append",
-        )
-    before = read_manifest(spark, t, last_committed_version(spark, t))
-    assert len(before["files"]) >= 16
-    info = rewrite_data_files(spark, t, target_mb=512)
-    after = read_manifest(spark, t, info.version)
-    assert len(after["files"]) == 1  # tiny table -> one target file
-    assert after["rewrite_files_before"] == len(before["files"])
-    # same rows, and the pre-compaction version is still time-travelable
-    got = sorted(r["id"] for r in read_snapshot(spark, t).collect())
-    assert got == list(range(400))
-    old = read_snapshot(spark, t, before["version"])
-    assert old.count() == 400
-
-
-def test_rewrite_data_files_validation(spark, tmp_path):
-    import pytest as _pytest
-
-    from feature_extraction_spark.sources.snapshots import rewrite_data_files
-
-    with _pytest.raises(FileNotFoundError):
-        rewrite_data_files(spark, str(tmp_path / "nope"))
-    t = str(tmp_path / "tv")
-    commit_snapshot(spark.range(5), t)
-    with _pytest.raises(ValueError):
-        rewrite_data_files(spark, t, target_mb=0)

@@ -143,49 +143,6 @@ def test_msasr_csv_source(spark, tmp_path):
     # silences: lead 100ms, between 100ms, trail 500ms
     assert np.allclose(sorted(row["sil_durs_ms"]), [100.0, 100.0, 500.0])
 
-def test_bucketed_join_skips_exchange(spark, transcripts, tmp_path):
-    """Two tables bucketed on the join key join WITHOUT any shuffle: the
-    physical plan has no Exchange on either side (the 100 TB co-location
-    story for the conv_id-keyed joins)."""
-    import pyspark.sql.functions as F
-
-    from feature_extraction_spark.sources.io import write_bucketed
-
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS bkt LOCATION '{tmp_path / 'wh'}'"
-    )
-    try:
-        write_bucketed(
-            transcripts.select("conv_id", "turn_idx", "ts"),
-            "bkt.turns_b", ["conv_id"], num_buckets=8,
-        )
-        dim = transcripts.groupBy("conv_id").agg(
-            F.count(F.lit(1)).alias("n_turns")
-        )
-        write_bucketed(dim, "bkt.dim_b", ["conv_id"], num_buckets=8)
-
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = spark.table("bkt.turns_b").join(
-                spark.table("bkt.dim_b"), on="conv_id"
-            )
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, plan
-            # and the result is right
-            assert joined.count() == transcripts.count()
-            # groupBy on the bucket key also skips the exchange
-            agg = spark.table("bkt.turns_b").groupBy("conv_id").count()
-            aplan = agg._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in aplan, aplan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt.turns_b")
-        spark.sql("DROP TABLE IF EXISTS bkt.dim_b")
-        spark.sql("DROP DATABASE IF EXISTS bkt")
-
-
 def test_size_conf_two_letter_suffixes(spark):
     """Regression (round-2 review): Spark-accepted forms like '512mb' must
     parse, not silently fall back to the default."""

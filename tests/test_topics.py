@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from feature_extraction_spark.ops.topics import (
     doc_topics,
-    topic_terms,
     train_topics,
 )
 
@@ -62,14 +61,15 @@ def test_mixtures_are_distributions(corpus, model):
 
 
 def test_topic_terms_vocabularies_separate(model):
-    terms = topic_terms(model, top_n=5)
-    assert len(terms) == 2
+    """Each topic's top terms (the reference's ``show_topics`` view) come
+    from exactly one ground-truth vocabulary."""
+    topics = model.lda_model.describeTopics(5).collect()
+    assert len(topics) == 2
     sport, cook = set(SPORT.split()), set(COOK.split())
-    for topic in terms:
-        tset = {t for t, _ in topic}
-        # each topic's top terms come from exactly one ground-truth vocab
+    for r in topics:
+        tset = {model.vocabulary[i] for i in r["termIndices"]}
         assert tset <= sport or tset <= cook
-        assert all(w > 0 for _, w in topic)
+        assert all(w > 0 for w in r["termWeights"])
 
 
 def test_seeded_reproducibility(corpus, model):
